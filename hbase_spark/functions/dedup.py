@@ -195,32 +195,6 @@ def _uh_consts(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 128) -> Column:
-    """k seeded min-hashes of the shingle set (the classic MinHash
-    signature; each seed is an independent permutation approximation).
-
-    Cost shape: each shingle string is xxhash64-ed exactly ONCE; the k
-    slots are derived with integer universal hashes (a*h+b mod p) in a
-    single ``aggregate`` pass, so the per-document work is
-    O(shingles * k) integer ops, not k string-hash passes.  All values
-    stay < 2^62, safe under ANSI long arithmetic.
-    """
-    consts = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in _uh_consts(num_hashes)
-        ]
-    )
-    base = F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
-    return F.aggregate(
-        base,
-        F.array_repeat(F.lit(_MERSENNE).cast("long"), num_hashes),
-        lambda acc, h: F.zip_with(
-            acc, consts, lambda accv, c: F.least(accv, (c["a"] * h + c["b"]) % _MERSENNE)
-        ),
-    )
-
-
 def _tok_expr(text_col: str) -> str:
     """selectExpr string: ascii token array of ``text_col`` as _t."""
     return (
@@ -286,7 +260,7 @@ def minhash_signatures(
     shingle_n: int = 3,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, _sig[, *extra_cols]) signature frame — a pure map stage,
+    """``(_id, *extra_cols, _sig)`` signature frame — a pure map stage,
     NO shuffle, built from the shared ``_gram_hash_exprs`` pipeline:
     grams are hashed with one multi-argument xxhash64 over the n
     tokens (r11 — the gram-string ``concat_ws`` assembly this replaced

@@ -28,6 +28,9 @@ map-side partial aggregate before the exchange.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -239,9 +242,14 @@ def resolve(
         tag "cannot extend lifetime beyond family settings" (:159), so
         the family TTL still applies on top.  Raw scans are exempt
         (preCheckRaw :189).  Requires ``now``.
+
+    ``scan``, ``get`` and ``multi_get`` resolve through the same core
+    (``_resolve_cells``), so the ``single_version`` contract and its
+    ``HBASE_SPARK_DEBUG_CONTRACTS`` check apply to them unchanged.  The
+    check reads the frame the core resolves: after ``as_of`` and
+    cell-TTL filtering here, after row-range, projection and ``as_of``
+    pruning in a scan.
     """
-    if single_version or delete_kinds is not None:
-        _check_caller_contracts(cells, single_version, delete_kinds)
     c = cells
     if as_of is not None:
         c = c.filter(F.col("ts") <= F.lit(as_of))
@@ -261,38 +269,106 @@ def resolve(
             | (F.col(cell_ttl_col) + F.col("ts") >= F.lit(now))
         )
 
+    bounded = time_range is not None and time_range[1] is not None
+    return _resolve_cells(
+        c,
+        versions=versions,
+        min_versions=min_versions,
+        ttl_by_family=ttl_by_family,
+        now=now,
+        new_version_behavior=new_version_behavior,
+        keep_deleted_cells=keep_deleted_cells,
+        single_version=single_version,
+        delete_kinds=delete_kinds,
+        time_pred=_time_range_pred(time_range) if time_range is not None else None,
+        kdc_hi=F.lit(time_range[1]) if bounded else None,
+    )
+
+
+def _ttl_predrop(
+    c: DataFrame,
+    ttl_by_family: dict[str, int] | None,
+    now: int | None,
+    min_versions: int | dict,
+) -> tuple[DataFrame, Column | None]:
+    """Family-TTL expiry (rs/StoreScanner.java:100 oldestUnexpiredTS).
+
+    Returns the frame with expired cells (puts and markers) pre-dropped
+    where MIN_VERSIONS <= 0 — ScanQueryMatcher.preCheck drops them only
+    when ``columns.isDone`` — per family when ``min_versions`` is
+    family-keyed, and the per-row cutoff column that ``cap_versions``
+    still has to apply for the families that keep expired versions
+    (None when no family does)."""
+    if not ttl_by_family:
+        return c, None
+    if now is None:
+        raise ValueError("now= is required when ttl_by_family is set")
+    min_versions = _norm_versions(min_versions, default=0)
+    cutoff = F.lit(None).cast("long")
+    for fam, ttl_ms in ttl_by_family.items():
+        cutoff = F.when(F.col("family") == fam, F.lit(now - ttl_ms)).otherwise(cutoff)
+    if isinstance(min_versions, int):
+        if min_versions <= 0:
+            return c.filter(cutoff.isNull() | (F.col("ts") >= cutoff)), None
+        return c, cutoff
+    pos_fams = [f for f, v in min_versions.items() if v > 0]
+    c = c.filter(
+        F.col("family").isin(pos_fams) | cutoff.isNull() | (F.col("ts") >= cutoff)
+    )
+    return c, (cutoff if pos_fams else None)
+
+
+def _kdc_keep(kdc_hi: Column, keep_deleted_cells: bool | frozenset) -> Column:
+    """KEEP_DELETED_CELLS marker tracking: markers at or after the
+    read's upper time bound do not mask
+    (NormalUserScanQueryMatcher.java:95 ``tr.withinTimeRange``) — KDC
+    families only, when family-keyed; the other families keep the
+    default withinOrAfterTimeRange tracking.  ``kdc_hi`` may be per
+    family, NULL where that family's range is open."""
+    keep = kdc_hi.isNull() | (F.col("ts") < kdc_hi)
+    if keep_deleted_cells is True:
+        return keep
+    return ~_fam_member(keep_deleted_cells) | keep
+
+
+def _resolve_cells(
+    c: DataFrame,
+    *,
+    versions: int | dict,
+    min_versions: int | dict,
+    ttl_by_family: dict[str, int] | None,
+    now: int | None,
+    new_version_behavior: bool | set,
+    keep_deleted_cells: bool | set,
+    single_version: bool,
+    delete_kinds,
+    time_pred: Column | None,
+    kdc_hi: Column | None,
+    cell_pred: Column | None = None,
+) -> DataFrame:
+    """The one resolve core behind resolve(), scan(), get() and
+    multi_get(): TTL pre-drop, tombstone masking, the put-visibility
+    time predicate, the cell predicate, then version capping — in
+    ScanQueryMatcher order (UserScanQueryMatcher.java:216: the cell
+    filter runs after delete masking, before version counting).
+
+    ``time_pred`` is the put-visibility predicate (a scan's per-family
+    ranges fold into it), ``kdc_hi`` the KEEP_DELETED_CELLS marker
+    bound (see ``_kdc_keep``); both None for an unbounded read.  The
+    caller contracts pick the path — ``single_version``: no masking
+    or capping; ``delete_kinds <= {DELETE_COLUMN}``: the fused
+    mask+cap — and ``HBASE_SPARK_DEBUG_CONTRACTS=1`` checks them
+    here, for every caller."""
+    if single_version or delete_kinds is not None:
+        _check_caller_contracts(c, single_version, delete_kinds)
     min_versions = _norm_versions(min_versions, default=0)
     keep_deleted_cells = _norm_flag(keep_deleted_cells)
-
-    cutoff = None
-    if ttl_by_family:
-        if now is None:
-            raise ValueError("now= is required when ttl_by_family is set")
-        cutoff = F.lit(None).cast("long")
-        for fam, ttl_ms in ttl_by_family.items():
-            cutoff = F.when(F.col("family") == fam, F.lit(now - ttl_ms)).otherwise(cutoff)
-        # With minVersions == 0 every expired cell (put or marker) is
-        # pre-dropped (ScanQueryMatcher.preCheck via columns.isDone) —
-        # per family when min_versions is family-keyed.
-        if isinstance(min_versions, int):
-            if min_versions <= 0:
-                c = c.filter(cutoff.isNull() | (F.col("ts") >= cutoff))
-                cutoff = None
-        else:
-            pos_fams = [f for f, v in min_versions.items() if v > 0]
-            c = c.filter(
-                F.col("family").isin(pos_fams)
-                | cutoff.isNull()
-                | (F.col("ts") >= cutoff)
-            )
-            if not pos_fams:
-                cutoff = None
+    c, cutoff = _ttl_predrop(c, ttl_by_family, now, min_versions)
+    visible = [p for p in (time_pred, cell_pred) if p is not None]
 
     puts = c.filter(F.col("type") == CellType.PUT)
     if single_version and _cap_is_identity(versions):
-        out = puts
-        if time_range is not None:
-            out = out.filter(_time_range_pred(time_range))
+        out = reduce(DataFrame.filter, visible, puts)
         if cutoff is not None:
             # expired cells survive only where min_versions keeps the
             # newest cell — with one version per column, rank is 1
@@ -309,32 +385,29 @@ def resolve(
         delete_kinds is not None
         and set(delete_kinds) <= {CellType.DELETE_COLUMN}
         and _norm_versions(versions) == 1
-        and _norm_versions(min_versions, default=0) == 0
+        and min_versions == 0
         and cutoff is None
         and _norm_flag(new_version_behavior) is False
     ):
-        return _resolve_column_deletes_v1(c, time_range, keep_deleted_cells)
+        put_pred = reduce(operator.and_, visible, F.col("type") == CellType.PUT)
+        del_pred = F.col("type") == CellType.DELETE_COLUMN
+        if keep_deleted_cells and kdc_hi is not None:
+            del_pred = del_pred & _kdc_keep(kdc_hi, keep_deleted_cells)
+        return _resolve_column_deletes_v1(c, put_pred, del_pred)
     dels = c.filter(F.col("type") != CellType.PUT)
-    if keep_deleted_cells and time_range is not None and time_range[1] is not None:
-        hi = F.lit(time_range[1])
-        if keep_deleted_cells is True:
-            dels = dels.filter(F.col("ts") < hi)
-        else:
-            # only KDC families see past delete markers; other families
-            # keep the default withinOrAfterTimeRange tracking
-            dels = dels.filter(~_fam_member(keep_deleted_cells) | (F.col("ts") < hi))
+    if keep_deleted_cells and kdc_hi is not None:
+        dels = dels.filter(_kdc_keep(kdc_hi, keep_deleted_cells))
     masked = mask_deletes(puts, dels, new_version_behavior=new_version_behavior)
-
-    if time_range is not None:
-        masked = masked.filter(_time_range_pred(time_range))
-
-    return cap_versions(masked, versions, min_versions=min_versions, ttl_cutoff=cutoff)
+    return cap_versions(
+        reduce(DataFrame.filter, visible, masked),
+        versions,
+        min_versions=min_versions,
+        ttl_cutoff=cutoff,
+    )
 
 
 def _resolve_column_deletes_v1(
-    c: DataFrame,
-    time_range: tuple[int | None, int | None] | None,
-    keep_deleted_cells: bool | frozenset,
+    c: DataFrame, put_pred: Column, del_pred: Column
 ) -> DataFrame:
     """Fused mask+cap for the ``delete_kinds <= {DELETE_COLUMN}``,
     ``versions=1`` contract: ONE grouped aggregation over the cells
@@ -353,24 +426,12 @@ def _resolve_column_deletes_v1(
     exact-version kind, has no such monotonicity — an exact-ts delete
     of the newest put can expose an older one — so it is outside the
     contract and takes the general mask_deletes path.)  Matcher order
-    is preserved: the marker maximum is taken over ALL markers
-    (deletes apply before the time-range check), the put ordering only
-    over in-range puts, and KEEP_DELETED_CELLS restricts which markers
-    are tracked exactly as the general path's ``dels`` filter does.
+    is preserved: the marker maximum is taken over the markers
+    ``del_pred`` tracks (deletes apply before the time-range check),
+    the put ordering only over the puts ``put_pred`` keeps (in range,
+    passing the cell filter).
     """
     extra = [x for x in c.columns if x not in ("row", "family", "qualifier")]
-    put_pred = F.col("type") == CellType.PUT
-    if time_range is not None:
-        put_pred = put_pred & _time_range_pred(time_range)
-    del_pred = F.col("type") == CellType.DELETE_COLUMN
-    if keep_deleted_cells and time_range is not None and time_range[1] is not None:
-        in_range = F.col("ts") < F.lit(time_range[1])
-        if keep_deleted_cells is True:
-            del_pred = del_pred & in_range
-        else:
-            del_pred = del_pred & (
-                ~_fam_member(keep_deleted_cells) | in_range
-            )
     payload = F.struct(*[F.col(x) for x in extra])
     ordering = F.struct(F.col("ts"), F.col("seq"))
     agged = c.groupBy("row", "family", "qualifier").agg(
@@ -620,19 +681,12 @@ def compact(
             compact(cells.filter(~member), keep_deleted_cells=False, **kw)
         )
     if keep_deleted_cells:
-        c = cells
-        if ttl_by_family:
-            if now is None:
-                raise ValueError("now= is required when ttl_by_family is set")
-            cutoff = F.lit(None).cast("long")
-            for fam, ttl_ms in ttl_by_family.items():
-                cutoff = F.when(
-                    F.col("family") == fam, F.lit(now - ttl_ms)
-                ).otherwise(cutoff)
-            c = c.filter(cutoff.isNull() | (F.col("ts") >= cutoff))
+        c, cutoff = _ttl_predrop(cells, ttl_by_family, now, min_versions)
         puts = c.filter(F.col("type") == CellType.PUT)
         dels = c.filter(F.col("type") != CellType.PUT)
-        return cap_versions(puts, versions).unionByName(dels)
+        return cap_versions(
+            puts, versions, min_versions=min_versions, ttl_cutoff=cutoff
+        ).unionByName(dels)
     return resolve(
         cells,
         versions=versions,

@@ -6,12 +6,14 @@ DataFrame plan:
 1. source pruning: row range + family/qualifier projection (these reach
    the parquet scan as pushed filters — the Spark analog of region
    pruning and HFile key-range pruning, SURVEY.md §4.1);
-2. snapshot resolution (tombstones / TTL / time-range / as-of);
-3. cell-level filter predicate (UserScanQueryMatcher.java:216 order:
-   after delete masking, before version counting);
-4. version capping (readVersions, client/Scan.java:487);
-5. row-stage filter (filterRow, rs/RegionScannerImpl.java:463-472);
-6. reversed ordering (client/Scan.java:692) and row limit (:958).
+2. as-of pruning, then snapshot resolution through the resolve core
+   shared with ``resolve()`` (operators.resolve): tombstones / TTL /
+   time-range, the cell-level filter predicate
+   (UserScanQueryMatcher.java:216 order: after delete masking, before
+   version counting) and version capping (readVersions,
+   client/Scan.java:487);
+3. row-stage filter (filterRow, rs/RegionScannerImpl.java:463-472);
+4. reversed ordering (client/Scan.java:692) and row limit (:958).
 
 The reference advances region-by-region sequentially
 (client/AsyncClientScanner.java:65); here all partitions scan in
@@ -27,7 +29,7 @@ from pyspark.sql import functions as F
 
 from hbase_spark.filters.base import Filter
 from hbase_spark.model import CellType
-from hbase_spark.operators.resolve import cap_versions, mask_deletes, _time_range_pred
+from hbase_spark.operators.resolve import _resolve_cells, _time_range_pred
 
 
 @dataclass
@@ -131,10 +133,11 @@ def scan(
 
     ``single_version=True`` is the caller's contract that the frame
     holds at most one PUT per (row, family, qualifier) and no
-    tombstones (see operators.resolve.resolve) — snapshot resolution
-    then degenerates to the put-type filter and the scan runs with no
-    aggregation, sort or exchange of its own; filters, pagination,
-    batching and limits apply unchanged."""
+    tombstones (see operators.resolve.resolve, whose
+    ``HBASE_SPARK_DEBUG_CONTRACTS`` check covers scans too) — snapshot
+    resolution then degenerates to the put-type filter and the scan
+    runs with no aggregation, sort or exchange of its own; filters,
+    pagination, batching and limits apply unchanged."""
     spec = spec or Scan(**kwargs)
     if isinstance(spec.filter, str):
         # shell/REST parity: a string filter goes through ParseFilter
@@ -168,91 +171,26 @@ def scan(
         if tp is not None:
             out = out.filter(tp)
         return _scan_tail(out, spec, resolved=False)
-    else:
-        from hbase_spark.operators.resolve import _fam_member, _norm_flag, _norm_versions
 
-        min_versions = _norm_versions(min_versions, default=0)
-        keep_deleted_cells = _norm_flag(keep_deleted_cells)
-        cutoff = None
-        if ttl_by_family:
-            if now is None:
-                raise ValueError("now= required with ttl_by_family")
-            cutoff = F.lit(None).cast("long")
-            for fam, ttl_ms in ttl_by_family.items():
-                cutoff = F.when(F.col("family") == fam, F.lit(now - ttl_ms)).otherwise(
-                    cutoff
-                )
-            # pre-drop expired cells only where minVersions<=0 (per
-            # family when min_versions is family-keyed) — mirrors
-            # resolve()
-            if isinstance(min_versions, int):
-                if min_versions <= 0:
-                    c = c.filter(cutoff.isNull() | (F.col("ts") >= cutoff))
-                    cutoff = None
-            else:
-                pos_fams = [f for f, v in min_versions.items() if v > 0]
-                c = c.filter(
-                    F.col("family").isin(pos_fams)
-                    | cutoff.isNull()
-                    | (F.col("ts") >= cutoff)
-                )
-                if not pos_fams:
-                    cutoff = None
-        from hbase_spark.operators.resolve import _cap_is_identity, _fam_col
+    cell_pred = (
+        spec.filter.cell_pred() if isinstance(spec.filter, Filter) else spec.filter
+    )
+    out = _resolve_cells(
+        c,
+        versions=spec.versions,
+        min_versions=min_versions,
+        ttl_by_family=ttl_by_family,
+        now=now,
+        new_version_behavior=new_version_behavior,
+        keep_deleted_cells=keep_deleted_cells,
+        single_version=single_version,
+        delete_kinds=None,
+        time_pred=_scan_time_pred(spec),
+        kdc_hi=_kdc_hi(spec),
+        cell_pred=cell_pred,
+    )
+    return _scan_tail(out, spec)
 
-        puts = c.filter(F.col("type") == CellType.PUT)
-        if single_version and _cap_is_identity(spec.versions):
-            out = puts
-            tp = _scan_time_pred(spec)
-            if tp is not None:
-                out = out.filter(tp)
-            if isinstance(spec.filter, Column):
-                out = out.filter(spec.filter)
-            elif isinstance(spec.filter, Filter):
-                pred = spec.filter.cell_pred()
-                if pred is not None:
-                    out = out.filter(pred)
-            if cutoff is not None:
-                minv = (
-                    F.lit(min_versions)
-                    if isinstance(min_versions, int)
-                    else _fam_col(min_versions, 0)
-                )
-                out = out.filter(
-                    cutoff.isNull() | (F.col("ts") >= cutoff) | (minv >= 1)
-                )
-            return _scan_tail(out, spec)
-        dels = c.filter(F.col("type") != CellType.PUT)
-        hi = _kdc_hi(spec)
-        if keep_deleted_cells and hi is not None:
-            # KEEP_DELETED_CELLS: markers after the scan's time range
-            # don't mask (NormalUserScanQueryMatcher.java:95) — KDC
-            # families only, when family-keyed; per-family CF ranges
-            # bound their own family's markers.
-            keep_pred = hi.isNull() | (F.col("ts") < hi)
-            if keep_deleted_cells is True:
-                dels = dels.filter(keep_pred)
-            else:
-                dels = dels.filter(
-                    ~_fam_member(keep_deleted_cells) | keep_pred
-                )
-        out = mask_deletes(puts, dels, new_version_behavior=new_version_behavior)
-        tp = _scan_time_pred(spec)
-        if tp is not None:
-            out = out.filter(tp)
-
-        # cell-level filter BEFORE version counting (matcher order)
-        if isinstance(spec.filter, Column):
-            out = out.filter(spec.filter)
-        elif isinstance(spec.filter, Filter):
-            pred = spec.filter.cell_pred()
-            if pred is not None:
-                out = out.filter(pred)
-
-        out = cap_versions(
-            out, spec.versions, min_versions=min_versions, ttl_cutoff=cutoff
-        )
-        return _scan_tail(out, spec)
 
 def _scan_tail(out: DataFrame, spec: Scan, *, resolved: bool = True) -> DataFrame:
     """Post-resolution scan stages, shared by the resolved, raw and

@@ -702,6 +702,19 @@ def test_debug_mode_validates_caller_contracts(spark, monkeypatch):
         resolve(
             tomb, versions=1, delete_kinds={CellType.DELETE_COLUMN}
         )
+    # scan/get/multi_get resolve through the same core, so the same
+    # check covers their single_version fast path
+    from hbase_spark.operators.get import get, multi_get
+    from hbase_spark.operators.scan import scan
+
+    assert scan(good, single_version=True).count() == 128
+    for read in (
+        lambda: scan(multi, single_version=True),
+        lambda: get(multi, "000001", single_version=True),
+        lambda: multi_get(multi, ["000001"], single_version=True),
+    ):
+        with pytest.raises(ValueError, match="single_version contract"):
+            read()
 
 
 def _column_delete_cells(spark):

@@ -532,6 +532,108 @@ def test_scan_projection_equals_post_resolve_filter(
     assert got == expected
 
 
+@st.composite
+def fast_path_frames(draw):
+    """Frames the resolve fast-path contracts admit: PUT-only with a
+    unique (row, family, qualifier) — single_version — or PUT plus
+    DELETE_COLUMN markers — delete_kinds={DELETE_COLUMN}."""
+    kind = draw(st.sampled_from(["put_unique", "put_dc"]))
+    if kind == "put_unique":
+        cells = draw(
+            st.lists(
+                cell_strategy.map(lambda c: {**c, "type": PUT}),
+                min_size=1,
+                max_size=18,
+                unique_by=lambda c: (c["row"], c["family"], c["qualifier"]),
+            )
+        )
+    else:
+        cells = draw(
+            st.lists(
+                cell_strategy.map(
+                    lambda c: {**c, "type": PUT if c["type"] == PUT else DC}
+                ),
+                min_size=1,
+                max_size=40,
+            )
+        )
+    full = [
+        {**c, "seq": i, "value": f"v{i}" if c["type"] == PUT else None}
+        for i, c in enumerate(cells)
+    ]
+    return kind, full
+
+
+@given(
+    frame=fast_path_frames(),
+    versions=st.sampled_from([1, 1, 2, {"f1": 1, "f2": 3}]),
+    time_range=st.sampled_from([None, (2, 6), (None, 5), (4, None)]),
+    ttl=st.sampled_from([None, {"f1": 4}, {"f1": 2, "f2": 5}]),
+    min_versions=st.sampled_from([0, 0, 1, {"f2": 2}]),
+    kdc=st.sampled_from([False, True, frozenset({"f1"})]),
+)
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_fast_paths_match_spec(
+    spark, frame, versions, time_range, ttl, min_versions, kdc
+):
+    # Law: each caller-contract fast path equals the executable spec on
+    # the frames its contract admits — resolve(delete_kinds=
+    # {DELETE_COLUMN}) on PUT + DELETE_COLUMN frames, and additionally
+    # resolve/scan(single_version=True) on unique PUT-only frames.
+    from hbase_spark.operators.scan import Scan
+    from hbase_spark.operators.scan import scan as scan_op
+
+    kind, full = frame
+    df = to_df(spark, full)
+    common = dict(
+        ttl_by_family=ttl,
+        now=8 if ttl else None,
+        min_versions=min_versions,
+        keep_deleted_cells=kdc,
+    )
+    kw = dict(versions=versions, time_range=time_range, **common)
+    expected = key_set(resolve_spec(full, **kw))
+
+    def keys(out):
+        return {(r.row, r.family, r.qualifier, r.ts, r.value) for r in out.collect()}
+
+    assert keys(resolve(df, delete_kinds={DC}, **kw)) == expected
+    if kind == "put_unique":
+        assert keys(resolve(df, single_version=True, **kw)) == expected
+        spec = Scan(versions=versions, time_range=time_range)
+        assert keys(scan_op(df, spec, single_version=True, **common)) == expected
+
+
+@pytest.mark.parametrize("marker_ts", [None, 1])
+def test_compact_keep_deleted_cells_honors_min_versions_under_ttl(
+    spark, marker_ts
+):
+    # MIN_VERSIONS keeps the newest version past its TTL under
+    # KEEP_DELETED_CELLS too: expired cells are pre-dropped only when
+    # minVersions <= 0 (ScanWildcardColumnTracker isDone /
+    # checkVersions), so an expired DELETE_COLUMN marker still masks.
+    from hbase_spark.operators.resolve import compact
+
+    cells = [
+        cell("r1", "f", "q", 1, value="old"),
+        cell("r1", "f", "q", 2, value="new"),
+    ]
+    if marker_ts is not None:
+        cells.append(cell("r1", "f", "q", marker_ts, typ=DC, seq=9))
+    c = to_df(spark, cells)
+    kw = dict(ttl_by_family={"f": 1}, now=100, min_versions=1)
+
+    def visible(df):
+        return sorted((r.ts, r.value) for r in resolve(df, **kw).collect())
+
+    assert visible(c) == [(2, "new")]
+    assert visible(compact(c, keep_deleted_cells=True, **kw)) == [(2, "new")]
+
+
 def test_apply_mutations_preserves_cell_ttl_both_ways(spark):
     """A TTL'd batch merged into an untagged base keeps its tags, and
     an untagged batch merged into a tagged base keeps the base's

@@ -1,9 +1,12 @@
 """Dump `.explain("formatted")` for every bench arm into
-plans/r11/<query>_<tag>.txt — the optimization round's evidence trail
-(before/after plan shapes: Exchange count, join strategy,
-PushedFilters/ReadSchema, codegen spans, Python eval nodes).
+<outdir>/<query>_<tag>.txt — before/after plan shapes (Exchange count,
+join strategy, PushedFilters/ReadSchema, codegen spans, Python eval
+nodes) and the plan-identity evidence for refactors.
 
-Usage: python tools/dump_plans_r11.py <tag> [sf_dir] [query ...]
+Usage: python tools/dump_arm_plans.py <outdir> <tag> [sf_dir] [query ...]
+
+``sf_dir`` defaults to ``$SPARK_GRAFT_SF_DIR``.  To compare two dumps
+modulo expression ids: ``sed -E 's/#[0-9]+/#N/g'`` both, then diff.
 """
 
 from __future__ import annotations
@@ -11,7 +14,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import EXTENDED, HEADLINE, headline_queries  # noqa: E402
@@ -19,12 +23,15 @@ from hbase_spark.sources.tables import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    only = set(sys.argv[3:])
-    outdir = "/root/repo/plans/r11"
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    outdir, tag = sys.argv[1], sys.argv[2]
+    sf_dir = sys.argv[3] if len(sys.argv) > 3 else os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        sys.exit("sf_dir not given and $SPARK_GRAFT_SF_DIR unset")
+    only = set(sys.argv[4:])
     os.makedirs(outdir, exist_ok=True)
-    spark = get_spark("plans_r11")
+    spark = get_spark("arm_plans")
     spark.sparkContext.setLogLevel("ERROR")
     entrymod.prepare(spark, sf_dir)
     entrymod._pq_index_layout(spark, sf_dir)
@@ -37,7 +44,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(f"{outdir}/{name}_{tag}.txt", "w") as f:
+        with open(os.path.join(outdir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
         print(f"wrote {name}_{tag}.txt")
 
