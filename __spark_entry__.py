@@ -39,7 +39,7 @@ from hbase_spark.operators.resolve import resolve
 from hbase_spark.operators.scan import Scan, scan
 from hbase_spark.operators.sync import sync_diff
 from hbase_spark.sources.melt import melt_table
-from hbase_spark.sources.tables import load_table
+from hbase_spark.sources.tables import load_table, materialize
 
 # ---------------------------------------------------------------------------
 # canonical melts (Spark side)
@@ -4560,9 +4560,7 @@ def _dsir_arm(spark, sf):
 
     docs = load_table(spark, sf, "documents")
     kw = dict(n=2, buckets=10_000, portable=True)
-    feats = hashed_ngram_features(
-        docs, extra_cols=("lang",), **kw
-    ).localCheckpoint(eager=False)
+    feats = materialize(hashed_ngram_features(docs, extra_cols=("lang",), **kw))
     target = hashed_ngram_counts(
         docs, features=feats.filter(F.col("lang") == "en"), **kw
     )

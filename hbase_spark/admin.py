@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from hbase_spark.model import cell_schema
 from hbase_spark.sources.layout import read_table, write_table
+from hbase_spark.sources.tables import materialize
 from hbase_spark.table import FamilyDescriptor, Table
 from hbase_spark.topology import TopologyMixin
 
@@ -288,7 +289,7 @@ class Admin(TopologyMixin):
                     & F.col("value").isNotNull()
                     & (F.length("value") > thr)
                 )
-            cells = cells.localCheckpoint(eager=False)
+            cells = materialize(cells)
             mob_dir = f"{_table_path(name)}/mob-v{v}"
             write_table(cells.filter(mob_pred),
                         f"{self.catalog_dir}/{mob_dir}", **wkw)

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hbase_spark.sources.tables import materialize
+
 END = "</w>"
 
 _ASCII_SPLIT = "[^a-z0-9]+"
@@ -128,9 +130,9 @@ def _train_merges(
     (remapped byte units, no marker)."""
     if batch < 1:
         raise ValueError(f"batch must be >= 1, got {batch}")
-    # lazy: each round's collect() is the action that materializes
-    # the frame - eager checkpoints cost one extra job per round
-    words = words.localCheckpoint(eager=False)
+    # each round's collect() runs the result stage that stores the
+    # frame, so no round pays a separate job to store it
+    words = materialize(words)
     merges: list[tuple[str, str]] = []
     rounds = 0
     while len(merges) < num_merges:
@@ -172,9 +174,7 @@ def _train_merges(
         for a, b in chosen:
             expr = _fold_merge(expr, a, b)
         merges.extend(chosen)
-        words = words.select(expr.alias("syms"), "count").localCheckpoint(
-            eager=False
-        )
+        words = materialize(words.select(expr.alias("syms"), "count"))
     if _stats is not None:
         _stats["rounds"] = rounds
     return merges

@@ -17,16 +17,6 @@ near-dup — the standard large-corpus dedup toolbox, built Spark-first:
 
 All hashing is seeded/deterministic — reruns produce identical
 clusters (required for reproducible data recipes).
-
-Materialization note (cluster deployments): materialize-once frames
-here use ``localCheckpoint(eager=False)`` — stored UNREPLICATED on
-executors with lineage truncated, so losing an executor (dynamic
-allocation, decommission, preemption) fails downstream actions
-instead of recomputing; Spark marks local checkpoints "not reliable".
-The frames involved are candidate-bounded and cheap to rebuild by
-re-running the query, which is the deliberate trade; on long-lived
-clusters with executor churn swap those call sites to ``.persist()``
-(+ unpersist) or a reliable ``checkpoint()``.
 """
 
 from __future__ import annotations
@@ -35,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hbase_spark.functions.text import normalize_text, tokens
+from hbase_spark.sources.tables import materialize
 
 
 # ---------------------------------------------------------------- exact
@@ -251,6 +242,10 @@ def _band_bucket_expr(num_hashes: int, bands: int) -> str:
     )
 
 
+# the aliases minhash_signatures' selectExpr stages carry
+_SIG_INTERNAL = frozenset({"_id", "_t", "_gh", "_harr", "_sig"})
+
+
 def minhash_signatures(
     docs: DataFrame,
     *,
@@ -267,7 +262,17 @@ def minhash_signatures(
     measured ~5x slower at r10, and the string allocation volume grew
     with corpus size), and the k signature slots are integer universal
     hashes folded in a single nested transform.  At 100 TB signatures
-    stay embarrassingly parallel map work with zero exchange."""
+    stay embarrassingly parallel map work with zero exchange.
+
+    An extra column named ``_id``, ``_t``, ``_gh``, ``_harr`` or
+    ``_sig`` would collide with or shadow an internal column, so it
+    raises ``ValueError``."""
+    clash = [c for c in extra_cols if c.lower() in _SIG_INTERNAL]
+    if clash:
+        raise ValueError(
+            f"extra_cols {clash} collide with minhash_signatures' "
+            f"internal columns {sorted(_SIG_INTERNAL)}"
+        )
     extras = [_ident(c) for c in extra_cols]
     gh, harr, sig = _gram_hash_exprs(num_hashes, shingle_n)
     return (
@@ -538,15 +543,13 @@ def minhash_pairs(
     # shrinks both SMJ inputs when even that overflows.  (A
     # groupBy-collect_list re-keying was measured 2.8x worse at 16x:
     # the hash agg copies every set array an extra time.)
-    pairs = pairs.localCheckpoint(eager=False)
+    pairs = materialize(pairs)
     cand_docs = pairs.select(
         F.explode(F.array("a", "b")).alias("_id")
     ).distinct()
     # checkpointed: BOTH pair sides read this frame — without it the
     # semi-join (which sorts the set payload by _id) runs twice
-    hsets = per_doc.join(cand_docs, "_id", "left_semi").localCheckpoint(
-        eager=False
-    )
+    hsets = materialize(per_doc.join(cand_docs, "_id", "left_semi"))
     ha = hsets.select(F.col("_id").alias("a"), F.col("_hs").alias("_hs_a"))
     hb = hsets.select(F.col("_id").alias("b"), F.col("_hs").alias("_hs_b"))
     verified = pairs.join(ha, "a").join(hb, "b")
@@ -991,10 +994,10 @@ def semantic_dedup(
     # minhash path; the paper's pipeline materializes cluster
     # assignments too — (id, vec, list_id) is corpus-sized but spills
     # (MEMORY_AND_DISK), never OOMs.
-    assigned = _assign_clusters_arrow(
+    assigned = materialize(_assign_clusters_arrow(
         vecs.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
         centroids,
-    ).localCheckpoint(eager=False)
+    ))
     from hbase_spark.functions.similarity import dot, norm
 
     if verify == "pandas":

@@ -33,7 +33,7 @@ Rows are pairs of longs throughout; hub nodes never materialize a
 neighbor array (no collect_list/collect_set — the window's min buffer
 spills through the external sorter), and nothing data-sized reaches
 the driver — the fixpoint check collects one (count, hash-sum) row
-per round.  Each round is localCheckpointed to cut
+per round.  Each round is materialized to cut
 the lineage that iterative plans otherwise accumulate.
 
 The reference has no graph operator; this backs ``dedup_clusters``
@@ -44,6 +44,8 @@ pipelines (e.g. the cluster step of Lee et al. 2022's NearDup).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from hbase_spark.sources.tables import materialize
 
 
 def _signature(edges: DataFrame) -> tuple:
@@ -194,11 +196,10 @@ def connected_components(
             ),
         ).otherwise(c)
 
-    e = (
+    e = materialize(
         edges.select(_node(src).alias("_u"), _node(dst).alias("_v"))
         .filter(F.col("_u") != F.col("_v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     # One star pair per fixpoint signature.  Checking every OTHER round
     # (two pairs per signature) was measured in round 7 and REJECTED:
@@ -209,7 +210,7 @@ def connected_components(
     # batched).  Driver latency only dominates below bench scale.
     sig = _signature(e)
     for _ in range(max_rounds):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        e = materialize(_small_star(_large_star(e)))
         nxt = _signature(e)
         if nxt == sig:
             break

@@ -32,15 +32,6 @@ dimension tables: Spark broadcasts them when small and shuffle-joins
 on the hash key when not.  Scoring never collects anything to the
 driver; scalar statistics (vocab size, class totals) ride along as
 1-row/¦classes¦-row frames cross-joined into the plan.
-
-Materialization note (cluster deployments): trained count tables and
-the DSIR feature frame materialize with ``localCheckpoint(eager=False)``
-— unreplicated executor storage with truncated lineage, so an executor
-loss fails downstream scoring actions instead of recomputing (Spark
-marks local checkpoints "not reliable").  The stored frames are
-vocabulary-bounded and rebuilt by re-running training; on clusters
-with executor churn prefer ``.persist()`` or a reliable
-``checkpoint()`` at those call sites.
 """
 
 from __future__ import annotations
@@ -50,6 +41,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from hbase_spark.sources.tables import materialize
 
 from .text import _ascii_tokens
 
@@ -99,7 +92,7 @@ def train_bigram_lm(
     re-tokenized the reference corpus): every token contributes an
     order-1 gram hash and every adjacent pair an order-2 hash to a
     single tagged explode, one combined hash-agg counts them, and the
-    per-order count frames are filters over the localCheckpointed
+    per-order count frames are filters over the materialized
     result — which is vocabulary-bounded, never corpus-sized, so the
     materialization is the model itself.  Only (order, hash, count)
     rows shuffle.
@@ -127,11 +120,10 @@ def train_bigram_lm(
             ),
         ).otherwise(F.array().cast("array<struct<_k:int,_h:long>>")),
     )
-    counts = (
+    counts = materialize(
         base.select(F.explode(tagged).alias("_g"))
         .groupBy(F.col("_g._k").alias("_k"), F.col("_g._h").alias("_h"))
         .agg(F.count("*").alias("_c"))
-        .localCheckpoint(eager=False)
     )
     uni = counts.filter(F.col("_k") == 1).select(
         F.col("_h").alias("h1"), F.col("_c").alias("c1")
@@ -282,7 +274,7 @@ def train_naive_bayes(
     """Train multinomial NB from labeled documents in ONE tokenize
     pass (optimization guide §1.2: the word-class counts, the class
     priors, and the vocab stat each used to re-scan and re-tokenize
-    the corpus): a localCheckpointed (id, label, word-hash) occurrence
+    the corpus): a materialized (id, label, word-hash) occurrence
     frame — ``explode_outer`` keeps token-less documents as one
     NULL-hash row so the class priors still count them — feeds all
     three aggregates.  Only (word hash, label, count) rows shuffle;
@@ -291,7 +283,7 @@ def train_naive_bayes(
     ``id_col`` must identify documents uniquely (the class prior is a
     distinct-count over it).
     """
-    feats = (
+    feats = materialize(
         docs.select(
             F.col(id_col).alias("_id"),
             F.col(label_col).alias("label"),
@@ -304,7 +296,6 @@ def train_naive_bayes(
                 F.transform("_t", lambda w: F.xxhash64(w))
             ).alias("hw"),
         )
-        .localCheckpoint(eager=False)
     )
     word_class = (
         feats.filter(F.col("hw").isNotNull())
@@ -500,7 +491,7 @@ def train_ngram_lm(
     per-order aggregations used to re-scan and re-tokenize the corpus
     n times; now every order's gram hashes ride one tagged explode
     into one combined hash-agg (map-side combinable; text never
-    shuffles), and the per-order frames filter the localCheckpointed
+    shuffles), and the per-order frames filter the materialized
     counts — vocabulary-bounded, the model itself.
     """
     if n < 1:
@@ -518,11 +509,10 @@ def train_ngram_lm(
             for k in range(1, n + 1)
         ]
     )
-    counts = (
+    counts = materialize(
         base.select(F.explode(tagged).alias("_g"))
         .groupBy(F.col("_g._k").alias("_k"), F.col("_g._h").alias("_h"))
         .agg(F.count("*").cast("long").alias("_c"))
-        .localCheckpoint(eager=False)
     )
     orders = {
         k: counts.filter(F.col("_k") == k).select(
@@ -716,7 +706,7 @@ def hashed_ngram_features(
     tokenize+hash pass every DSIR input derives from: raw counts are
     ``groupBy(bucket).count()``, target counts the same over a label
     slice (pass the label through ``extra_cols``), and the per-doc
-    weight sum groups by id.  Checkpoint it when feeding all three —
+    weight sum groups by id.  ``materialize`` it when feeding all three —
     the paper's pipeline materializes hashed features once too, and
     (id, bucket) rows are about the size of the tokens themselves."""
     base = docs.select(
@@ -796,7 +786,7 @@ def dsir_weights(
     stage + two broadcast joins + one hash-agg; totals ride as 1-row
     broadcasts.  Docs with no features get weight NULL.  Pass a
     precomputed ``hashed_ngram_features`` frame (``features``) to skip
-    re-tokenizing — with a checkpointed feature frame the whole DSIR
+    re-tokenizing — with a materialized feature frame the whole DSIR
     chain tokenizes the corpus ONCE instead of three times.
     CONTRACT: the frame, the count frames, and this call must all use
     the SAME (n, buckets, portable) — the add-k smoothing divides by

@@ -15,20 +15,14 @@ of terms: the term list broadcast-joins against the tf frame (semi-
 join prunes every non-matching posting map-side), corpus statistics
 (N, avgdl) ride as a 1-row broadcast, and top-k per query is a
 TakeOrdered — no global sort, no collect.
-
-Materialization note (cluster deployments): the postings frame
-materializes with ``localCheckpoint(eager=False)`` — unreplicated
-executor storage with truncated lineage, so an executor loss fails
-downstream queries instead of recomputing (Spark marks local
-checkpoints "not reliable"); rebuilding is one re-run of the
-tokenize+agg.  On clusters with executor churn prefer ``.persist()``
-or a reliable ``checkpoint()`` there.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from hbase_spark.sources.tables import materialize
 
 from .text import _ascii_tokens
 
@@ -169,12 +163,10 @@ def bm25_topk(
     """
     spark = docs.sparkSession
     # The postings frame feeds both the score join and the df agg —
-    # localCheckpoint so the corpus tokenizes once, not per consumer
+    # materialized so the corpus tokenizes once, not per consumer
     # (the persisted-index role an inverted index plays in a search
     # engine; at 100 TB this frame is what you'd write to parquet).
-    tf = term_frequencies(docs, id_col=id_col, text_col=text_col).localCheckpoint(
-        eager=False
-    )
+    tf = materialize(term_frequencies(docs, id_col=id_col, text_col=text_col))
     qt = _query_terms(spark, queries)
     # Corpus stats derived from the postings frame instead of a second
     # tokenize scan of the corpus (optimization guide §1.2/§2.3):

@@ -6,13 +6,6 @@ document fingerprinting over a ``text`` column.  Everything here is
 built from JVM-side pyspark.sql.functions (no Python in the hot path),
 so the operators stay inside whole-stage codegen and scale linearly —
 at 100 TB they are a single map stage with no shuffle.
-
-Materialization note (cluster deployments): ``exact_substr_dedup``
-materializes its tokenized frame with ``localCheckpoint(eager=False)``
-— unreplicated executor storage, truncated lineage, so an executor
-loss fails the action instead of recomputing (Spark marks local
-checkpoints "not reliable"); rebuild is one re-run of the query.  On
-clusters with executor churn prefer ``.persist()`` there.
 """
 
 from __future__ import annotations
@@ -22,6 +15,8 @@ import re as _re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from hbase_spark.sources.tables import materialize
 
 
 def _memo_expr(fn):
@@ -114,18 +109,6 @@ def bpe_ish_token_count(col: str | Column = "text") -> Column:
     chars = F.length(F.regexp_replace(c, r"\s+", ""))
     # subword pieces ~ max(words, chars/4)
     return F.greatest(pieces, (chars / 4).cast("int"))
-
-
-def lang_scores(col: str | Column = "text") -> Column:
-    """Map language -> marker-word hit ratio."""
-    toks = tokens(col)
-    n = F.greatest(F.size(toks), F.lit(1))
-    entries = []
-    for lang, markers in _LANG_MARKERS.items():
-        hits = F.size(F.array_intersect(toks, F.array(*[F.lit(m) for m in markers])))
-        # ratio of distinct marker hits is robust to doc length
-        entries.append(F.struct(F.lit(lang).alias("lang"), (hits / F.lit(len(markers))).alias("score")))
-    return F.map_from_entries(F.array(*entries))
 
 
 @_memo_expr
@@ -1291,7 +1274,6 @@ def duplicate_ngram_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Corpus-wide duplicate-n-gram fraction — the substring-level
     duplication measure of "Deduplicating Training Data Makes Language
@@ -1310,11 +1292,10 @@ def duplicate_ngram_stats(
     gram hash; the duplicated-gram set (count >= 2) then left-joins
     back against the per-doc gram hashes for a single roll-up — the
     join touches gram hashes only, and the corpus text is tokenized
-    in a map stage, never shuffled.  ``materialize=True`` (default)
-    lazily localCheckpoints the (id, hash) gram frame so tokenization
-    runs ONCE instead of once per consuming branch (measured 2.2x at
-    sf0.1) at the cost of ~16 bytes/gram on executor disks; pass
-    False to trade CPU for zero intermediate storage.
+    in a map stage, never shuffled.  The (id, hash) gram frame is
+    materialized so tokenization runs ONCE instead of once per
+    consuming branch (measured 2.2x at sf0.1), at the cost of ~16
+    bytes/gram on executor disks.
     """
     # Two projection stages so the token split materializes once as a
     # real column before the gram transform reads it — inlining
@@ -1327,8 +1308,7 @@ def duplicate_ngram_stats(
             F.array_distinct(_word_ngrams(F.col("_t"), n))
         ).alias("_g"),
     ).select(id_col, F.xxhash64("_g").alias("_h"))
-    if materialize:
-        grams = grams.localCheckpoint(eager=False)
+    grams = materialize(grams)
     dup = (
         grams.groupBy("_h")
         .agg(F.count("*").alias("_docs"))
@@ -1477,16 +1457,15 @@ def remove_duplicated_substrings(
     )
     # Tokenize ONCE (r10): the duplicate-gram aggregation, the
     # gram-join-back, and the coverage pass each re-scanned the text
-    # and re-ran the split (three parquet text scans in the plan).  A
-    # lazy checkpoint of the (id, token array) frame materializes at
-    # the first consumer inside the action and the other two read it.
+    # and re-ran the split (three parquet text scans in the plan).  The
+    # materialized (id, token array) frame is computed by the first
+    # consumer inside the action and the other two read it.
     # All three consumers need the FULL token set, so — unlike
     # minhash's candidates-only verify — storing beats recomputing
     # (measured at sf0.1: 1.80 → 1.68 median; checkpointing the
     # post-window starts frame instead was measured WORSE, 1.61 →
     # 1.73, because exchange/stage reuse already shares that subtree).
-    if not base.isStreaming:
-        base = base.localCheckpoint(eager=False)
+    base = materialize(base)
     toks, starts = _gram_hash_frames(base, n)
     dup = (
         starts.groupBy("_gh")

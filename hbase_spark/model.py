@@ -75,9 +75,3 @@ def cell_schema(
             T.StructField("seq", T.LongType(), False),
         ]
     )
-
-
-def is_cell_frame(df) -> bool:
-    """True if ``df`` carries the CellFrame columns."""
-    cols = set(df.columns)
-    return all(c in cols for c in CELL_COLUMNS)

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_spark.sources.tables import materialize
+
 _INTERPRETERS = {
     "long": "long",          # LongColumnInterpreter
     "double": "double",      # DoubleColumnInterpreter
@@ -98,9 +100,7 @@ def agg_table(
         # checkpointed so the endpoint-stats scan runs ONCE: the median
         # protocol's phase 1 reads (count, min, max) straight from this
         # frame — the grouped twin of the ungrouped stats= sharing
-        base = cells.groupBy(*group_by).agg(*base_aggs).localCheckpoint(
-            eager=False
-        )
+        base = materialize(cells.groupBy(*group_by).agg(*base_aggs))
         med = grouped_median_two_phase(cells, v, group_by, stats=base)
         # all-null-value groups carry count 0 in base and no median row
         return base.join(med, group_by, "left")
@@ -376,17 +376,15 @@ def grouped_median_two_phase(
             F.min(dv).alias("_lo"),
             F.max(dv).alias("_hi"),
         )
-    st = (
+    # its result stage runs inside the loop's first isEmpty() check,
+    # not as a job of its own
+    st = materialize(
         st.select(
             *gb, "_cn", "_lo", "_hi",
             F.expr("(_cn + 1) div 2").alias("_k1"),
             F.expr("(_cn + 2) div 2").alias("_k2"),
             F.lit(0).alias("_stall"),
         )
-        # lazy: the loop's isEmpty() check is the first action anyway,
-        # so the materialization folds into it instead of costing a
-        # separate job at construction (r10; eager was the default)
-        .localCheckpoint(eager=False)
     )
     active = (
         (F.col("_cn") > final_cap)
@@ -459,12 +457,8 @@ def grouped_median_two_phase(
             F.col("_k2_new").alias("_k2"),
             F.col("_stall_new").alias("_stall"),
         )
-        st = (
-            st.filter(~active)
-            .unionByName(advanced)
-            # lazy; next round's isEmpty() materializes it (see above)
-            .localCheckpoint(eager=False)
-        )
+        # next round's isEmpty() runs its result stage (see above)
+        st = materialize(st.filter(~active).unionByName(advanced))
     # final: per-group middle ranks over the narrowed candidates.  The
     # carried (lo, hi) are actual candidate values (per-bucket extrema,
     # not reconstructed edges), so the between() re-scope reproduces

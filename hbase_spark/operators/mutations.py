@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from hbase_spark.model import CellType, cell_schema
 from hbase_spark.operators.resolve import resolve
+from hbase_spark.sources.tables import materialize
 
 
 def make_cells(spark, rows: list[tuple], key_type=None, value_type=None) -> DataFrame:
@@ -157,14 +158,12 @@ def apply_increments(
         F.sum("delta").alias("_delta")
     )
     # The aggregated delta set feeds three plan branches (two slice
-    # builds + the merge probe); localCheckpoint materializes it once
-    # on executors instead of re-running the upstream aggregation per
-    # branch (measured 2x end-to-end at sf0.1 — AQE does NOT reuse the
-    # exchange across the broadcast-converted semi-join builds).  It is
-    # the small side by construction (one row per touched column), so
-    # executor MEMORY_AND_DISK holds at any scale where the merge
-    # itself is feasible.
-    summed = summed.localCheckpoint(eager=False)
+    # builds + the merge probe); materializing it once on executors
+    # beats re-running the upstream aggregation per branch (measured 2x
+    # end-to-end at sf0.1 — AQE does NOT reuse the exchange across the
+    # broadcast-converted semi-join builds).  It is the small side by
+    # construction: one row per touched column.
+    summed = materialize(summed)
     # Slice the table BEFORE resolving: puts narrow to the touched
     # (row, family, qualifier) columns, tombstones to the touched
     # (row, family) groups (family-scope markers mask across
@@ -211,10 +210,8 @@ def apply_increments(
     # resolve (the union itself, the tombstone-mask builds, version
     # capping); without materialization each reference recomputes the
     # whole slice+resolve subtree.  Like ``summed`` it is bounded by
-    # the mutation batch (one row per touched column) and distributed
-    # across executors, so MEMORY_AND_DISK holds wherever the merge
-    # itself is feasible.
-    return apply_mutations(cells, new_cells.localCheckpoint(eager=False))
+    # the mutation batch (one row per touched column).
+    return apply_mutations(cells, materialize(new_cells))
 
 
 def increment_view(
@@ -326,7 +323,7 @@ def apply_appends(
         F.lit(seq).cast("long").alias("seq"),
     )
     # batch-bounded, multiply-referenced downstream — see apply_increments
-    return apply_mutations(cells, new_cells.localCheckpoint(eager=False))
+    return apply_mutations(cells, materialize(new_cells))
 
 
 def apply_check_and_mutate(

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hbase_spark.model import CellType
+from hbase_spark.sources.tables import materialize
 
 _VERSION_ORDER = ["ts", "seq"]  # newest ts first, then latest mutation
 
@@ -475,21 +476,14 @@ def mask_deletes(
                                 (ts, seq) markers of single-version
                                 DELETEs.
 
-    The tombstone slice is materialized ONCE with a lazy
-    localCheckpoint (r10): both build sides read ``dels``, and
-    without it each aggregation re-scans (and re-melts) the source —
-    the tombstone log was the only part of the input read twice.
-    Lazy, so no job runs at plan-build time (resolve() is called from
-    ~50 query paths); the first build side's computation stores the
+    The tombstone slice is materialized ONCE (r10): both build sides
+    read ``dels``, and without it each aggregation re-scans (and
+    re-melts) the source — the tombstone log was the only part of the
+    input read twice.  The first build side's computation stores the
     slice, the second reads it.  Tombstones are a small fraction of
     cells, so the stored slice is marker-bounded, never table-sized.
-    Cluster note: local checkpoints live unreplicated on executors
-    with truncated lineage — an executor loss fails the read instead
-    of recomputing the slice; re-running the read rebuilds it.  On
-    clusters with executor churn prefer ``.persist()`` here.
     """
-    if not dels.isStreaming:
-        dels = dels.localCheckpoint(eager=False)
+    dels = materialize(dels)
     fam_side = (
         dels.filter(
             F.col("type").isin(CellType.DELETE_FAMILY, CellType.DELETE_FAMILY_VERSION)

@@ -12,8 +12,8 @@ decisions become file-set selection + a partitioned rewrite:
   is dropped, this is purely the small-files problem.  Implemented as
   a re-range-partition + sorted rewrite.
 - **major** (MajorCompactionScanQueryMatcher): the full tombstone/TTL/
-  version rewrite — delegated to ``operators.resolve.compact`` (the
-  semantic core lives there; this module adds the layout write).
+  version rewrite is ``operators.resolve.compact``, run on a table by
+  ``Admin.major_compact``.
 - **date-tiered** (DateTieredCompactionPolicy.java:61): organize files
   into exponential time tiers so time-range scans prune whole tiers
   and old tiers never get rewritten again.  Implemented as
@@ -58,32 +58,6 @@ def compact_minor(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def compact_major(
-    cells: DataFrame,
-    path: str,
-    *,
-    num_regions: int = 32,
-    versions: int | dict = 1,
-    min_versions: int | dict = 0,
-    ttl_by_family: dict | None = None,
-    now: int | None = None,
-    keep_deleted_cells: bool | set = False,
-) -> None:
-    """Major compaction: full tombstone/TTL/version rewrite, then the
-    sorted layout write."""
-    from hbase_spark.operators.resolve import compact
-
-    rewritten = compact(
-        cells,
-        versions=versions,
-        min_versions=min_versions,
-        ttl_by_family=ttl_by_family,
-        now=now,
-        keep_deleted_cells=keep_deleted_cells,
-    )
-    compact_minor(rewritten, path, num_regions=num_regions)
 
 
 def date_tier(ts: Column, *, now: int, window_ms: int, tiers: int = 6) -> Column:

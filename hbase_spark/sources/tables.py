@@ -82,6 +82,40 @@ def get_spark(app: str = "hbase_spark", cpus: int | None = None) -> SparkSession
     )
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """Store ``df`` once for a plan that reads it from several branches
+    (or a loop that reads it every round) — the library's one
+    materialization seam.
+
+    A streaming frame comes back unchanged: it cannot be checkpointed,
+    and each micro-batch is computed once per trigger anyway.  Any
+    other frame becomes ``df.localCheckpoint(eager=False)``, a
+    ``LogicalRDD`` over blocks in the executors' block managers with
+    the lineage cut.
+
+    When its jobs run (Spark 4.1, AQE on): over a map-only plan no job
+    starts at call time, and the first action that reads the frame
+    computes and stores it.  Over a plan with an exchange, the call
+    itself runs the shuffle map stage (one job for one exchange) while
+    adaptive planning settles the final plan; only the result stage
+    waits for the first action.  ``tests/test_plans.py`` pins both.
+
+    Failure mode: local checkpoints are stored unreplicated with
+    truncated lineage, so losing an executor (dynamic allocation,
+    decommission, preemption) fails the actions that read the frame
+    instead of recomputing it — Spark marks local checkpoints "not
+    reliable".  Re-running the query rebuilds it.  Every call site
+    stores a frame bounded by its own reason (a mutation batch, a
+    candidate set, a vocabulary, one loop round) that is cheap to
+    rebuild, which is the deliberate trade; a deployment with executor
+    churn changes this one line to ``persist()`` or a reliable
+    ``checkpoint()``.
+    """
+    if df.isStreaming:
+        return df
+    return df.localCheckpoint(eager=False)
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, *, spread: bool = False
 ) -> DataFrame:

@@ -184,6 +184,24 @@ def test_minhash_dedup_hot_bucket_raises(spark, docs):
     assert out.count() < 6
 
 
+def test_minhash_signatures_rejects_reserved_extra_cols(spark):
+    """An extra column named like one of minhash_signatures' internal
+    aliases would collide with or shadow it: it must raise naming the
+    column, and an ordinary extra column still passes through."""
+    import pytest
+    from hbase_spark.functions.dedup import minhash_signatures
+
+    d = spark.createDataFrame([(1, "a b c d e", 7)], ["doc_id", "text", "x"])
+    for name in ("_id", "_t", "_gh", "_harr", "_sig", "_SIG"):
+        with pytest.raises(ValueError, match=rf"\['{name}'\]"):
+            minhash_signatures(
+                d.withColumnRenamed("x", name), extra_cols=(name,)
+            ).collect()
+    out = minhash_signatures(d, num_hashes=4, extra_cols=("x",))
+    assert out.columns == ["_id", "x", "_sig"]
+    assert out.first()["x"] == 7
+
+
 def test_shingle_frame_non_ascii_doc_gets_empty_gram(spark):
     """A doc with unicode tokens but no ascii-alnum runs must yield the
     '' gram (same ascii tokenizer as the main path / shingle_arrays /

@@ -782,3 +782,71 @@ def test_column_delete_kinds_falls_back_outside_contract(spark):
         general = resolve(c, **kw)
         assert fb.exceptAll(general).count() == 0, kw
         assert general.exceptAll(fb).count() == 0, kw
+
+
+def test_materialize_job_timing(spark):
+    """materialize()'s documented job timing on this Spark build (AQE
+    on): over a map-only plan the call starts no job; over a plan with
+    one exchange it starts exactly one (the shuffle map stage), and the
+    result stage waits for the first action.  A Spark upgrade that
+    changes either shows up here."""
+    from hbase_spark.sources.tables import materialize
+
+    sc = spark.sparkContext
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    map_only = spark.range(100_000).select((F.col("id") % 7).alias("k"))
+    grouped = spark.range(100_000).groupBy((F.col("id") % 7).alias("k")).count()
+    for name, df, at_call in (("map_only", map_only, 0), ("exchange", grouped, 1)):
+        stored, n = jobs_in(f"materialize_{name}_call", lambda: materialize(df))
+        assert n == at_call, (name, n)
+        rows, n = jobs_in(f"materialize_{name}_action", stored.collect)
+        assert n >= 1 and len(rows) == df.count(), (name, n)
+
+
+def test_materialize_is_the_only_checkpoint_site():
+    """Every library frame stored for several consumers goes through
+    ``sources.tables.materialize``: no other ``.localCheckpoint`` use
+    exists in the package or the entry module."""
+    import ast
+    import pathlib
+
+    class Sites(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.scope, self.found = rel, ["<module>"], []
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Attribute(self, node):
+            if node.attr == "localCheckpoint":
+                self.found.append((self.rel, self.scope[-1]))
+            self.generic_visit(node)
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    sites = []
+    for path in [*sorted((root / "hbase_spark").rglob("*.py")),
+                 root / "__spark_entry__.py"]:
+        v = Sites(path.relative_to(root).as_posix())
+        v.visit(ast.parse(path.read_text(), filename=str(path)))
+        sites += v.found
+    assert sites == [("hbase_spark/sources/tables.py", "materialize")]
+
+
+def test_materialize_passes_streaming_frames_through(spark):
+    from hbase_spark.sources.tables import materialize
+
+    stream = spark.readStream.format("rate").load()
+    assert materialize(stream) is stream

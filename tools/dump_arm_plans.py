@@ -5,13 +5,17 @@ nodes) and the plan-identity evidence for refactors.
 
 Usage: python tools/dump_arm_plans.py <outdir> <tag> [sf_dir] [query ...]
 
-``sf_dir`` defaults to ``$SPARK_GRAFT_SF_DIR``.  To compare two dumps
-modulo expression ids: ``sed -E 's/#[0-9]+/#N/g'`` both, then diff.
+``sf_dir`` defaults to ``$SPARK_GRAFT_SF_DIR``.  Dumps are written
+normalised, so two dumps of the same plan diff clean: expression ids
+(``#123``), Java ``byte[]`` identity hashes (``[B@1a2b3c``) and the
+session-global ``plan_id=`` counters all vary run to run and become
+``#N``, ``[B@N`` and ``plan_id=N``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -20,6 +24,18 @@ sys.path.insert(0, ROOT)
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import EXTENDED, HEADLINE, headline_queries  # noqa: E402
 from hbase_spark.sources.tables import get_spark  # noqa: E402
+
+_RUN_VARYING = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\[B@[0-9a-f]+"), "[B@N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+]
+
+
+def normalise(plan: str) -> str:
+    for pat, repl in _RUN_VARYING:
+        plan = pat.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -45,7 +61,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         with open(os.path.join(outdir, f"{name}_{tag}.txt"), "w") as f:
-            f.write(plan)
+            f.write(normalise(plan))
         print(f"wrote {name}_{tag}.txt")
 
 
