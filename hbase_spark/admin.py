@@ -26,13 +26,14 @@ and the default namespace stays flat for back-compat.
 from __future__ import annotations
 
 import json
+import os
 import time
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from hbase_spark.model import cell_schema
+from hbase_spark.model import CellType, cell_schema
 from hbase_spark.sources.layout import read_table, write_table
 from hbase_spark.sources.tables import materialize
 from hbase_spark.table import FamilyDescriptor, Table
@@ -60,6 +61,54 @@ def _fam_dict(d: FamilyDescriptor) -> dict:
         "keep_deleted_cells": d.keep_deleted_cells,
         "mob_threshold": d.mob_threshold,
     }
+
+
+def _holds_tombstones(roots: list[str]) -> bool | None:
+    """Whether the parquet files under ``roots`` hold any tombstone,
+    read from their footer statistics on the driver (no Spark job).
+    PUT is the smallest CellType code, so a max(type) of PUT over every
+    row group means PUT-only; a layout with no rows holds none.  None
+    (unknown) when a row group carries no type statistics or pyarrow
+    cannot open the catalog's filesystem."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    for root in roots:
+        if "://" not in root:
+            fs = pafs.LocalFileSystem()
+            path = os.path.abspath(Admin._local_path(root))
+        else:
+            try:
+                fs, path = pafs.FileSystem.from_uri(root)
+            except (pa.ArrowInvalid, OSError):
+                return None
+        sel = pafs.FileSelector(path, recursive=True, allow_not_found=True)
+        for info in fs.get_file_info(sel):
+            if not info.path.endswith(".parquet") or info.base_name[0] in "._":
+                continue
+            meta = pq.read_metadata(info.path, filesystem=fs)
+            col = meta.schema.names.index("type")
+            for g in range(meta.num_row_groups):
+                stats = meta.row_group(g).column(col).statistics
+                if stats is None or not stats.has_min_max:
+                    return None
+                if stats.max > CellType.PUT:
+                    return True
+    return False
+
+
+def _recorded_delete_kinds(desc: dict) -> frozenset | None:
+    """``frozenset()`` — no tombstone kind — when the last footer read
+    found the descriptor's current layout PUT-only, else None
+    (unknown).  The record names the dirs it describes, so a repoint
+    that records nothing (truncate, restore, clone, an older
+    descriptor) reads as unknown."""
+    rec = desc.get("put_only")
+    if rec and rec == {"data_dir": desc.get("data_dir"),
+                       "mob_dir": desc.get("mob_dir")}:
+        return frozenset()
+    return None
 
 
 def _table_path(name: str) -> str:
@@ -244,7 +293,7 @@ class Admin(TopologyMixin):
             from pyspark.sql import functions as F
 
             cells = cells.filter(F.col("family").isin(list(fams)))
-        return Table(cells, fams, now)
+        return Table(cells, fams, now, _delete_kinds=_recorded_delete_kinds(desc))
 
     def flush(self, name: str, table: Table, *, num_regions: int = 32,
               action: str = "write") -> None:
@@ -261,7 +310,15 @@ class Admin(TopologyMixin):
 
         Client-write flushes are fenced on a STANDBY sync cluster
         (assert_sync_writable); compaction rewrites stay allowed, like
-        the reference's server-side operations."""
+        the reference's server-side operations.
+
+        The flush records whether the layout it wrote is PUT-only, the
+        analog of the delete-family count an HBase store file carries
+        in its metadata: the driver reads the type statistics in the
+        footers of the files just written (no extra Spark job; see
+        ``_record_put_only``).  ``Admin.table()`` hands the fact to
+        ``Table``, whose reads then skip tombstone masking (see
+        operators.resolve.resolve)."""
         if action == "write":
             self.assert_sync_writable(name)
         self.check_space_quota(name, action=action)
@@ -298,6 +355,7 @@ class Admin(TopologyMixin):
         write_table(cells, f"{self.catalog_dir}/{data_dir}", **wkw)
         desc["version"] = v
         desc["data_dir"] = data_dir
+        self._record_put_only(desc)
         self._write_desc(name, desc)
         if desc.get("sft") == "FILE":
             # FILE tracker: the flush commits its store-file list
@@ -470,19 +528,8 @@ class Admin(TopologyMixin):
         under the family schema knobs, as a NEW immutable version dir
         (snapshots referencing the old dir stay valid).  Honors the
         compaction master switch (shell `compaction_switch`)."""
-        from hbase_spark.operators.resolve import compact
-
         self._require_switch("compaction")
-        t = self.table(name, now=now)
-        rewritten = compact(
-            t.cells,
-            versions=t._versions_map(),
-            min_versions=t._min_versions(),
-            ttl_by_family=t._ttl_map(),
-            now=now,
-            keep_deleted_cells=t._kdc(),
-        )
-        self.flush(name, Table(rewritten, t.families, now),
+        self.flush(name, self.table(name, now=now).compact(),
                    num_regions=num_regions, action="compact")
 
     # -- region introspection (shell list_regions / get_splits /
@@ -526,6 +573,15 @@ class Admin(TopologyMixin):
     # the parent each; merge writes one merged region).  Parquet
     # min/max row stats on the new files keep range pruning exact.
     # ----------------------------------------------------------------------
+
+    def _record_put_only(self, desc: dict) -> None:
+        """Set ``desc["put_only"]`` to the dirs of its current layout
+        when their footers hold no tombstone, else drop it (unknown)."""
+        desc.pop("put_only", None)
+        dirs = {"data_dir": desc.get("data_dir"), "mob_dir": desc.get("mob_dir")}
+        roots = [f"{self.catalog_dir}/{d}" for d in dirs.values() if d]
+        if dirs["data_dir"] and _holds_tombstones(roots) is False:
+            desc["put_only"] = dirs
 
     def _abs_data_dir(self, desc: dict, name: str) -> str:
         return (
@@ -594,6 +650,7 @@ class Admin(TopologyMixin):
                     ob.pre_open(f)
         desc["version"] = v
         desc["data_dir"] = new_rel
+        self._record_put_only(desc)
         self._write_desc(name, desc)  # the catalog flip = the handoff
         if desc.get("sft") == "FILE":
             # geometry commits its store-file list atomically with the

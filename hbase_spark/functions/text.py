@@ -32,6 +32,12 @@ def _memo_expr(fn):
     DataFrames and queries in the process.  Builders called with a
     Column (or any unhashable) argument are never cached — only
     name-string forms, whose output cannot depend on caller state.
+
+    Bound: one entry per distinct hashable argument tuple.  The
+    library's call sites pass column-name strings, the ``default``
+    label and the C4 bad-word tuple, so a process holds a handful of
+    entries per builder; only a caller inventing a fresh column name
+    per call grows it, by one small expression tree each.
     """
 
     cache: dict = {}

@@ -137,6 +137,42 @@ def apply_mutations(cells: DataFrame, mutations: DataFrame) -> DataFrame:
     return cells.unionByName(mutations, allowMissingColumns=True)
 
 
+def _touched_slice(
+    cells: DataFrame, batch: DataFrame, resolve_kw: dict | None
+) -> DataFrame:
+    """The cells a read-modify-write batch reads, sliced BEFORE
+    resolving: puts narrow to the touched (row, family, qualifier)
+    columns, tombstones to the touched (row, family) groups
+    (family-scope markers mask across qualifiers, so they must survive
+    the narrowing).  The slice resolves identically to resolving
+    everything and then projecting, but the snapshot shuffle runs over
+    the touched columns only — on a wide table this is a many-fold
+    smaller resolve input.  ``batch`` is unique per (row, family,
+    qualifier) by construction, so its key projection IS the
+    touched-column set (no distinct), and the resolved slice contains
+    touched columns only (no post-resolve re-filter needed).  No
+    distinct on the family keys either: a semi-join build side
+    tolerates duplicate keys (the hash relation dedups), one fewer
+    exchange+job than deduping first.
+
+    When ``resolve_kw`` says the cells hold no tombstone (an empty
+    ``delete_kinds``, see operators.resolve.resolve), the tombstone
+    branch is dropped: it could only read nothing."""
+    puts = cells.filter(F.col("type") == CellType.PUT).join(
+        batch.select("row", "family", "qualifier"),
+        ["row", "family", "qualifier"],
+        "left_semi",
+    )
+    delete_kinds = (resolve_kw or {}).get("delete_kinds")
+    if delete_kinds is not None and not delete_kinds:
+        return puts
+    return puts.unionByName(
+        cells.filter(F.col("type") != CellType.PUT).join(
+            batch.select("row", "family"), ["row", "family"], "left_semi"
+        )
+    )
+
+
 def apply_increments(
     cells: DataFrame,
     deltas: DataFrame,
@@ -164,31 +200,7 @@ def apply_increments(
     # broadcast-converted semi-join builds).  It is the small side by
     # construction: one row per touched column.
     summed = materialize(summed)
-    # Slice the table BEFORE resolving: puts narrow to the touched
-    # (row, family, qualifier) columns, tombstones to the touched
-    # (row, family) groups (family-scope markers mask across
-    # qualifiers, so they must survive the narrowing).  The slice
-    # resolves identically to resolving everything and then projecting,
-    # but the snapshot shuffle runs over the touched columns only — on
-    # a wide table this is a many-fold smaller resolve input.
-    # summed is unique per (row, family, qualifier) by construction, so
-    # its key projection IS the touched-column set (no distinct), and
-    # the resolved slice contains touched columns only (no post-resolve
-    # re-filter needed).
-    touched_cols = summed.select("row", "family", "qualifier")
-    # no distinct: a semi-join build side tolerates duplicate keys (the
-    # hash relation dedups), so the projection joins directly — one
-    # fewer exchange+job than deduping first
-    touched_fams = summed.select("row", "family")
-    sliced = (
-        cells.filter(F.col("type") == CellType.PUT)
-        .join(touched_cols, ["row", "family", "qualifier"], "left_semi")
-        .unionByName(
-            cells.filter(F.col("type") != CellType.PUT).join(
-                touched_fams, ["row", "family"], "left_semi"
-            )
-        )
-    )
+    sliced = _touched_slice(cells, summed, resolve_kw)
     current = resolve(sliced, versions=1, **(resolve_kw or {})).select(
         "row", "family", "qualifier", F.col("value").cast("long").alias("_old")
     )
@@ -296,23 +308,9 @@ def apply_appends(
             ),
         ).alias("_suffix")
     )
-    # same slice narrowing as apply_increments: puts to the touched
-    # columns (batch is key-unique), tombstones to the touched families
-    touched_cols = batch.select("row", "family", "qualifier")
-    # build side of a semi-join needs no pre-dedup (see apply_increments)
-    touched_fams = batch.select("row", "family")
-    sliced = (
-        cells.filter(F.col("type") == CellType.PUT)
-        .join(touched_cols, ["row", "family", "qualifier"], "left_semi")
-        .unionByName(
-            cells.filter(F.col("type") != CellType.PUT).join(
-                touched_fams, ["row", "family"], "left_semi"
-            )
-        )
-    )
-    current = resolve(sliced, versions=1, **(resolve_kw or {})).select(
-        "row", "family", "qualifier", F.col("value").alias("_old")
-    )
+    current = resolve(
+        _touched_slice(cells, batch, resolve_kw), versions=1, **(resolve_kw or {})
+    ).select("row", "family", "qualifier", F.col("value").alias("_old"))
     new_cells = batch.join(current, ["row", "family", "qualifier"], "left").select(
         "row",
         "family",

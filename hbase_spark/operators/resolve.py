@@ -250,6 +250,12 @@ def resolve(
     check reads the frame the core resolves: after ``as_of`` and
     cell-TTL filtering here, after row-range, projection and ``as_of``
     pruning in a scan.
+
+    ``delete_kinds`` empty means the frame holds no tombstone at all:
+    masking is then skipped under every knob.  ``Table`` passes it for
+    a layout whose ``Admin.flush`` found no tombstone in the files it
+    wrote (see ``Admin.flush``), so Admin-backed reads of a PUT-only
+    table take that path; the debug check above covers it too.
     """
     c = cells
     if as_of is not None:
@@ -357,9 +363,10 @@ def _resolve_cells(
     ranges fold into it), ``kdc_hi`` the KEEP_DELETED_CELLS marker
     bound (see ``_kdc_keep``); both None for an unbounded read.  The
     caller contracts pick the path — ``single_version``: no masking
-    or capping; ``delete_kinds <= {DELETE_COLUMN}``: the fused
-    mask+cap — and ``HBASE_SPARK_DEBUG_CONTRACTS=1`` checks them
-    here, for every caller."""
+    or capping; empty ``delete_kinds``: no masking, under any knobs;
+    ``delete_kinds <= {DELETE_COLUMN}``: the fused mask+cap — and
+    ``HBASE_SPARK_DEBUG_CONTRACTS=1`` checks them here, for every
+    caller."""
     if single_version or delete_kinds is not None:
         _check_caller_contracts(c, single_version, delete_kinds)
     min_versions = _norm_versions(min_versions, default=0)
@@ -382,7 +389,11 @@ def _resolve_cells(
                 cutoff.isNull() | (F.col("ts") >= cutoff) | (minv >= 1)
             )
         return out
-    if (
+    if delete_kinds is not None and not delete_kinds:
+        # no tombstones: mask_deletes is the identity under every knob
+        # (NEW_VERSION_BEHAVIOR and KEEP_DELETED_CELLS only act on markers)
+        masked = puts
+    elif (
         delete_kinds is not None
         and set(delete_kinds) <= {CellType.DELETE_COLUMN}
         and _norm_versions(versions) == 1
@@ -395,10 +406,13 @@ def _resolve_cells(
         if keep_deleted_cells and kdc_hi is not None:
             del_pred = del_pred & _kdc_keep(kdc_hi, keep_deleted_cells)
         return _resolve_column_deletes_v1(c, put_pred, del_pred)
-    dels = c.filter(F.col("type") != CellType.PUT)
-    if keep_deleted_cells and kdc_hi is not None:
-        dels = dels.filter(_kdc_keep(kdc_hi, keep_deleted_cells))
-    masked = mask_deletes(puts, dels, new_version_behavior=new_version_behavior)
+    else:
+        dels = c.filter(F.col("type") != CellType.PUT)
+        if keep_deleted_cells and kdc_hi is not None:
+            dels = dels.filter(_kdc_keep(kdc_hi, keep_deleted_cells))
+        masked = mask_deletes(
+            puts, dels, new_version_behavior=new_version_behavior
+        )
     return cap_versions(
         reduce(DataFrame.filter, visible, masked),
         versions,
@@ -650,6 +664,7 @@ def compact(
     versions: int | dict = 1,
     min_versions: int | dict = 0,
     keep_deleted_cells: bool | set = False,
+    _delete_kinds: frozenset | None = None,
 ) -> DataFrame:
     """Major compaction ≡ materialized snapshot resolution
     (rs/querymatcher/MajorCompactionScanQueryMatcher.java): rewrite the
@@ -659,7 +674,9 @@ def compact(
     With ``keep_deleted_cells`` (CompactionScanQueryMatcher.java:95-102)
     deleted cells and their markers are NOT dropped — compaction then
     only removes cells by TTL and version count, so back-in-time reads
-    keep working after the rewrite.
+    keep working after the rewrite.  ``_delete_kinds`` is the
+    ``delete_kinds`` contract a ``Table`` derived from its layout (see
+    ``resolve``), not a caller option.
     """
     keep_deleted_cells = _norm_flag(keep_deleted_cells)
     if isinstance(keep_deleted_cells, frozenset):
@@ -668,7 +685,7 @@ def compact(
         # per-CF compaction.
         member = _fam_member(keep_deleted_cells)
         kw = dict(ttl_by_family=ttl_by_family, now=now, versions=versions,
-                  min_versions=min_versions)
+                  min_versions=min_versions, _delete_kinds=_delete_kinds)
         return compact(
             cells.filter(member), keep_deleted_cells=True, **kw
         ).unionByName(
@@ -687,4 +704,5 @@ def compact(
         min_versions=min_versions,
         ttl_by_family=ttl_by_family,
         now=now,
+        delete_kinds=_delete_kinds,
     )

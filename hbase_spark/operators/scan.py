@@ -127,6 +127,7 @@ def scan(
     min_versions: int | dict = 0,
     keep_deleted_cells: bool | set = False,
     single_version: bool = False,
+    _delete_kinds: frozenset | None = None,
     **kwargs,
 ) -> DataFrame:
     """Execute a Scan over a raw CellFrame, returning visible cells.
@@ -137,7 +138,9 @@ def scan(
     ``HBASE_SPARK_DEBUG_CONTRACTS`` check covers scans too) — snapshot
     resolution then degenerates to the put-type filter and the scan
     runs with no aggregation, sort or exchange of its own; filters,
-    pagination, batching and limits apply unchanged."""
+    pagination, batching and limits apply unchanged.  ``_delete_kinds``
+    is the ``delete_kinds`` contract a ``Table`` derived from its
+    layout (see operators.resolve.resolve) — not a caller option."""
     spec = spec or Scan(**kwargs)
     if isinstance(spec.filter, str):
         # shell/REST parity: a string filter goes through ParseFilter
@@ -184,7 +187,7 @@ def scan(
         new_version_behavior=new_version_behavior,
         keep_deleted_cells=keep_deleted_cells,
         single_version=single_version,
-        delete_kinds=None,
+        delete_kinds=_delete_kinds,
         time_pred=_scan_time_pred(spec),
         kdc_hi=_kdc_hi(spec),
         cell_pred=cell_pred,

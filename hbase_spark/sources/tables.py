@@ -38,8 +38,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # metadata latency per call that a catalog-backed deployment pays once
 # at table registration, not per query (a 6-table star join paid it 6
 # times per construction).  Keyed by applicationId so a new session
-# never sees another session's frames; the testdata corpora and the
-# sweep's scaled copies are immutable within a process.
+# never sees another session's frames, and bounded by it: an insert
+# drops every entry of a stopped session, so the memo holds one
+# session's frames (tables x corpora x spread) at a time.  The testdata
+# corpora and the sweep's scaled copies are immutable within a process.
 _FRAME_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -149,7 +151,8 @@ def load_table(
     retries (sortBeforeRepartition stays on)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, sf_dir, name, bool(spread))
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, name, bool(spread))
     cached = _FRAME_CACHE.get(key)
     if cached is not None:
         return cached
@@ -169,5 +172,7 @@ def load_table(
             # Newer parquet readers surface TIMESTAMP(NANOS) as NTZ;
             # session tz is pinned to UTC so the cast is value-preserving.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    for stale in [k for k in _FRAME_CACHE if k[0] != app]:
+        del _FRAME_CACHE[stale]
     _FRAME_CACHE[key] = df
     return df

@@ -15,7 +15,7 @@ declaratively.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame
 
@@ -49,6 +49,13 @@ class Table:
     cells: DataFrame
     families: dict[str, FamilyDescriptor] = field(default_factory=dict)
     now: int | None = None  # TTL clock, explicit for determinism
+    # The tombstone kinds the cells can hold: frozenset() when the
+    # Admin.flush that wrote their layout found none, None (unknown)
+    # otherwise.  Set by Admin.table() only — a fact about the data,
+    # never a user option; every read path hands it to the resolve core
+    # as its delete_kinds contract (operators.resolve.resolve).  Tables
+    # derived by a mutation start unknown again.
+    _delete_kinds: frozenset | None = field(default=None, repr=False)
 
     def _check_families(self, items: list[tuple]) -> None:
         """Reject mutations to undeclared families, like the reference's
@@ -95,6 +102,7 @@ class Table:
         """The resolved visible table (default: schema MAX_VERSIONS)."""
         kw.setdefault("min_versions", self._min_versions())
         kw.setdefault("keep_deleted_cells", self._kdc())
+        kw.setdefault("delete_kinds", self._delete_kinds)
         return resolve(
             self.cells,
             versions=self._versions_map(versions),
@@ -111,8 +119,6 @@ class Table:
             # max before execution (the reference applies the min at the
             # region scanner; a bare Table with no descriptors stays
             # permissive).
-            from dataclasses import replace
-
             spec = replace(spec, versions=self._versions_map(spec.versions))
         return scan_op(
             self.cells,
@@ -122,6 +128,7 @@ class Table:
             new_version_behavior=self._nvb(),
             min_versions=self._min_versions(),
             keep_deleted_cells=self._kdc(),
+            _delete_kinds=self._delete_kinds,
         )
 
     def get(self, row_key, **kw) -> DataFrame:
@@ -140,7 +147,7 @@ class Table:
             [(k,) for k in row_keys], ["row"]
         )  # stays a LocalTableScan: broadcast builds driver-side, no job
         narrowed = self.cells.join(F.broadcast(keys), "row", "left_semi")
-        return Table(narrowed, self.families, self.now).scan(Scan(**kw))
+        return replace(self, cells=narrowed).scan(Scan(**kw))
 
     def exists(self, row_key) -> bool:
         return self.get(row_key).select("row").limit(1).count() > 0
@@ -190,6 +197,7 @@ class Table:
             "now": self.now,
             "new_version_behavior": self._nvb(),
             "min_versions": self._min_versions(),
+            "delete_kinds": self._delete_kinds,
         }
 
     def increment(self, deltas, *, ts: int, seq: int) -> "Table":
@@ -277,6 +285,7 @@ class Table:
             ttl_by_family=self._ttl_map(),
             now=self.now,
             keep_deleted_cells=self._kdc(),
+            _delete_kinds=self._delete_kinds,
         )
         return Table(rewritten, self.families, self.now)
 

@@ -703,8 +703,11 @@ class TopologyMixin:
         """`refresh_hfiles` (the example RefreshHFilesEndpoint): pick
         up store files added out-of-band under the table's layout —
         refreshByPath drops the cached listing; returns the file count
-        now visible."""
+        now visible.  The layout's PUT-only record is re-read from the
+        footers, adopted files included."""
         desc = self._read_desc(name)
+        self._record_put_only(desc)
+        self._write_desc(name, desc)
         self.spark.catalog.refreshByPath(self._abs_data_dir(desc, name))
         return len(self._list_layout_files(desc, name))
 

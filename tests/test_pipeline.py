@@ -232,7 +232,9 @@ def test_ann_recall_gate_raises_on_low_recall(spark):
 
     import pytest
 
-    sys.path.insert(0, "/root/repo")
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as e
 
     sf = "/root/testdata/sf0.001"
@@ -3300,3 +3302,31 @@ def test_semantic_dedup_skewed_cluster_beyond_bucket_cap(spark):
         semantic_dedup(
             vecs, threshold=0.999, nlist=2, cap=256, on_overflow="error"
         ).collect()
+
+
+def test_frame_cache_drops_stopped_sessions(spark, sf_dir):
+    # the memo keeps one session's frames: an insert drops the entries
+    # of every other applicationId
+    from hbase_spark.sources import tables
+
+    stale = ("app-stopped", sf_dir, "orders", False)
+    tables._FRAME_CACHE[stale] = object()
+    tables._FRAME_CACHE.pop(
+        (spark.sparkContext.applicationId, sf_dir, "customer", False), None
+    )
+    load_table(spark, sf_dir, "customer")
+    assert stale not in tables._FRAME_CACHE
+    assert {k[0] for k in tables._FRAME_CACHE} == {spark.sparkContext.applicationId}
+
+
+def test_tools_import_their_own_checkout():
+    # a tool run from another clone must import that clone's code: no
+    # tool may name an absolute checkout path
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    for tool in sorted((root / "tools").glob("*.py")):
+        src = tool.read_text()
+        assert str(root) not in src, tool.name
+        assert not re.search(r"sys\.path\.insert\(\s*0\s*,\s*['\"]/", src), tool.name

@@ -715,6 +715,19 @@ def test_debug_mode_validates_caller_contracts(spark, monkeypatch):
     ):
         with pytest.raises(ValueError, match="single_version contract"):
             read()
+    # the contract a Table derives from its layout (Admin.table) is
+    # checked the same way on every Table read
+    from hbase_spark.table import Table
+
+    wrong = Table(tomb, _delete_kinds=frozenset())
+    for read in (
+        wrong.snapshot,
+        wrong.scan,
+        lambda: wrong.multi_get(["000001"]),
+        lambda: wrong.compact().cells,
+    ):
+        with pytest.raises(ValueError, match="delete_kinds contract"):
+            read()
 
 
 def _column_delete_cells(spark):
@@ -850,3 +863,36 @@ def test_materialize_passes_streaming_frames_through(spark):
 
     stream = spark.readStream.format("rate").load()
     assert materialize(stream) is stream
+
+
+def test_multi_get_on_put_only_layout_skips_tombstone_masking(spark, tmp_path):
+    # A flushed PUT-only layout is recorded as such; a Table read of it
+    # then has nothing to mask: no tombstone-slice checkpoint, no mask joins
+    # — one aggregation.  The same read with the facts unknown keeps
+    # the general path (the guard's control).  Both plan sections are
+    # searched: AQE drops the mask joins from the final plan once their
+    # build sides come out empty, but only after the jobs that built
+    # them ran.
+    import re
+    from dataclasses import replace
+
+    from hbase_spark.admin import Admin
+
+    admin = Admin(spark, str(tmp_path))
+    admin.create_table("t", ["f"])
+    puts = [(str(i).zfill(6), "f", "q", f"v{i}") for i in range(64)]
+    admin.flush("t", admin.table("t").put(puts, ts=1, seq=1), num_regions=4)
+    t = admin.table("t")
+    mask_join = re.compile(r"BroadcastHashJoin \[[^\]]*\], \[[^\]]*\], LeftOuter")
+    tomb_scan = re.compile(r"Scan ExistingRDD\[[^\]]*type#")
+
+    def whole_plan(table):
+        df = table.multi_get(["000001", "000002"])
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    plan = whole_plan(t)
+    assert not mask_join.search(plan) and not tomb_scan.search(plan)
+    assert plan_of(t.multi_get(["000001"])).count("Exchange hashpartitioning") == 1
+    general = whole_plan(replace(t, _delete_kinds=None))
+    assert mask_join.search(general) and tomb_scan.search(general)

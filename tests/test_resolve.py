@@ -535,9 +535,10 @@ def test_scan_projection_equals_post_resolve_filter(
 @st.composite
 def fast_path_frames(draw):
     """Frames the resolve fast-path contracts admit: PUT-only with a
-    unique (row, family, qualifier) — single_version — or PUT plus
-    DELETE_COLUMN markers — delete_kinds={DELETE_COLUMN}."""
-    kind = draw(st.sampled_from(["put_unique", "put_dc"]))
+    unique (row, family, qualifier) — single_version — PUT-only with
+    several versions per column, or PUT plus DELETE_COLUMN markers —
+    delete_kinds={DELETE_COLUMN}."""
+    kind = draw(st.sampled_from(["put_unique", "put_multi", "put_dc"]))
     if kind == "put_unique":
         cells = draw(
             st.lists(
@@ -545,6 +546,14 @@ def fast_path_frames(draw):
                 min_size=1,
                 max_size=18,
                 unique_by=lambda c: (c["row"], c["family"], c["qualifier"]),
+            )
+        )
+    elif kind == "put_multi":
+        cells = draw(
+            st.lists(
+                cell_strategy.map(lambda c: {**c, "type": PUT}),
+                min_size=1,
+                max_size=30,
             )
         )
     else:
@@ -564,12 +573,24 @@ def fast_path_frames(draw):
     return kind, full
 
 
+@pytest.fixture(scope="module")
+def flushed(spark, tmp_path_factory):
+    """One Admin table the derived-contract law flushes each frame to
+    (declared splits: a flush then runs no range-sampling job)."""
+    from hbase_spark.admin import Admin
+
+    admin = Admin(spark, str(tmp_path_factory.mktemp("cell_types")))
+    admin.create_table("t", ["f1", "f2"], splits=["r2"])
+    return admin
+
+
 @given(
     frame=fast_path_frames(),
     versions=st.sampled_from([1, 1, 2, {"f1": 1, "f2": 3}]),
     time_range=st.sampled_from([None, (2, 6), (None, 5), (4, None)]),
     ttl=st.sampled_from([None, {"f1": 4}, {"f1": 2, "f2": 5}]),
     min_versions=st.sampled_from([0, 0, 1, {"f2": 2}]),
+    nvb=st.sampled_from([False, False, True, frozenset({"f2"})]),
     kdc=st.sampled_from([False, True, frozenset({"f1"})]),
 )
 @settings(
@@ -578,14 +599,18 @@ def fast_path_frames(draw):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_fast_paths_match_spec(
-    spark, frame, versions, time_range, ttl, min_versions, kdc
+    spark, flushed, frame, versions, time_range, ttl, min_versions, nvb, kdc
 ):
-    # Law: each caller-contract fast path equals the executable spec on
-    # the frames its contract admits — resolve(delete_kinds=
-    # {DELETE_COLUMN}) on PUT + DELETE_COLUMN frames, and additionally
-    # resolve/scan(single_version=True) on unique PUT-only frames.
+    # Law: each fast path equals the executable spec on the frames its
+    # contract admits — resolve(delete_kinds={DELETE_COLUMN}) on PUT +
+    # DELETE_COLUMN frames, resolve/scan(single_version=True) on unique
+    # PUT-only frames, and the derived contract on every frame: written
+    # through Admin.flush (which records a PUT-only layout) and read
+    # back through Table with the knobs as family descriptors.
     from hbase_spark.operators.scan import Scan
     from hbase_spark.operators.scan import scan as scan_op
+    from hbase_spark.table import FamilyDescriptor, Table
+    from tests.spec import _flag, _knob
 
     kind, full = frame
     df = to_df(spark, full)
@@ -593,6 +618,7 @@ def test_fast_paths_match_spec(
         ttl_by_family=ttl,
         now=8 if ttl else None,
         min_versions=min_versions,
+        new_version_behavior=nvb,
         keep_deleted_cells=kdc,
     )
     kw = dict(versions=versions, time_range=time_range, **common)
@@ -606,6 +632,21 @@ def test_fast_paths_match_spec(
         assert keys(resolve(df, single_version=True, **kw)) == expected
         spec = Scan(versions=versions, time_range=time_range)
         assert keys(scan_op(df, spec, single_version=True, **common)) == expected
+
+    flushed.flush("t", Table(df), num_regions=2)
+    for fam in ("f1", "f2"):
+        flushed.alter("t", fam, FamilyDescriptor(
+            max_versions=_knob(versions, fam, 1),
+            min_versions=_knob(min_versions, fam, 0),
+            ttl_ms=(ttl or {}).get(fam),
+            new_version_behavior=_flag(nvb, fam),
+            keep_deleted_cells=_flag(kdc, fam),
+        ))
+    t = flushed.table("t", now=common["now"])
+    put_only = all(c["type"] == PUT for c in full)
+    assert t._delete_kinds == (frozenset() if put_only else None)
+    assert keys(t.snapshot(time_range=time_range)) == expected
+    assert keys(t.scan(time_range=time_range, versions=10)) == expected
 
 
 @pytest.mark.parametrize("marker_ts", [None, 1])

@@ -6,8 +6,10 @@ pushdown, codegen spans).  Run: python tools/dump_plans.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import EXTENDED, HEADLINE, headline_queries  # noqa: E402
@@ -60,7 +62,7 @@ def main() -> None:
                 " (operators/aggregations.py median_two_phase; equality"
                 " with percentile() pinned in tests/test_aggregations).\n"
             )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("".join(out))
     print(f"wrote PLANS.md with {len(HEADLINE + EXTENDED)} plans")
 

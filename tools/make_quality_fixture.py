@@ -24,8 +24,10 @@ refit after featurization changes, then re-commit the fixture)
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -35,7 +37,7 @@ from hbase_spark.functions.classifier import (  # noqa: E402
 )
 from hbase_spark.sources.tables import get_spark, load_table  # noqa: E402
 
-FIXTURE = "/root/repo/fixtures/quality_clf"
+FIXTURE = str(ROOT / "fixtures" / "quality_clf")
 
 
 def main() -> None:

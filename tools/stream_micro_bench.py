@@ -20,8 +20,10 @@ import shutil
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -31,7 +33,7 @@ from hbase_spark.sources.tables import get_spark, load_table  # noqa: E402
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out_json = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/STREAM_MICRO_r11.json"
+    out_json = sys.argv[2] if len(sys.argv) > 2 else str(ROOT / "STREAM_MICRO_r11.json")
     spark = get_spark("stream_micro")
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="hb_stream_micro_")

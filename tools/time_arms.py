@@ -13,8 +13,10 @@ import os
 import statistics
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import headline_queries  # noqa: E402
