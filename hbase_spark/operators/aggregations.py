@@ -121,51 +121,14 @@ def agg_table(
     )
 
 
-def _single(visible, family, qualifier, interpreter, expr_fn,
-            exact_median: bool | None = None):
-    # the scalar helpers read ONE field — skip the median column
-    # entirely rather than paying even an approx sketch for a value
-    # the caller discards; agg_median opts back in explicitly
-    row = agg_table(
-        visible, family, qualifier, interpreter=interpreter,
-        exact_median=exact_median,
-    ).collect()[0]
-    return expr_fn(row)
-
-
-def agg_max(visible, family, qualifier, interpreter="long"):
-    """AggregationClient.max — endpoint/client/.../AggregationClient.java:228."""
-    return _single(visible, family, qualifier, interpreter, lambda r: r["max"])
-
-
-def agg_min(visible, family, qualifier, interpreter="long"):
-    """AggregationClient.min — AggregationClient.java:295."""
-    return _single(visible, family, qualifier, interpreter, lambda r: r["min"])
-
-
-def agg_sum(visible, family, qualifier, interpreter="long"):
-    """AggregationClient.sum — AggregationClient.java:437."""
-    return _single(visible, family, qualifier, interpreter, lambda r: r["sum"])
-
-
-def agg_avg(visible, family, qualifier, interpreter="long"):
-    """AggregationClient.avg — (sum, count) pair merged client-side."""
-    return _single(visible, family, qualifier, interpreter, lambda r: r["avg"])
-
-
-def agg_std(visible, family, qualifier, interpreter="long"):
-    """AggregationClient.std — AggregationClient.java:675."""
-    return _single(visible, family, qualifier, interpreter, lambda r: r["std"])
-
-
 def agg_median(visible, family, qualifier, interpreter="long"):
     """AggregationClient.median — AggregationClient.java:778,796.
-    Exact via the bounded two-phase protocol (the one scalar helper
-    that actually consumes the median field)."""
-    return _single(
-        visible, family, qualifier, interpreter,
-        lambda r: r["median"], exact_median=True,
-    )
+    Exact via the bounded two-phase protocol.  The other endpoint
+    scalars (max/min/sum/avg/std) are columns of the same
+    ``agg_table`` row."""
+    return agg_table(
+        visible, family, qualifier, interpreter=interpreter,
+    ).collect()[0]["median"]
 
 
 def median_two_phase(

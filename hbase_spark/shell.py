@@ -1,11 +1,18 @@
 """Shell-flavored convenience surface (hbase-shell parity,
-hbase-shell/src/main/ruby/shell/commands/ — scan/get/put/delete/count
-with HBase shell keyword arguments re-expressed as Python kwargs).
+hbase-shell/src/main/ruby/shell/commands/ — HBase shell keyword
+arguments re-expressed as Python kwargs).
 
-The JRuby shell's ``scan 't', STARTROW => 'a', FILTER => "..."``
-becomes ``shell_scan(table, STARTROW='a', FILTER="...")``.  Filters
-are ParseFilter strings (the same language the shell accepts);
-COLUMNS use the shell's 'family:qualifier' form.
+Data commands take the table first and keep their own defs: the JRuby
+shell's ``scan 't', STARTROW => 'a', FILTER => "..."`` becomes
+``shell_scan(table, STARTROW='a', FILTER="...")``.  Filters are
+ParseFilter strings (the same language the shell accepts); COLUMNS
+use the shell's 'family:qualifier' form.
+
+Admin commands take the admin first and run through one dispatcher:
+``list`` becomes ``shell(admin, "list")``.  ``SHELL`` maps each
+command name to the ``Admin`` method it runs (plus any leading
+arguments the command binds, e.g. the switch kind), or to the def
+below for the commands that hold logic of their own.
 """
 
 from __future__ import annotations
@@ -189,11 +196,78 @@ def shell_deleteall(table: Table, row, *, ts: int, seq: int) -> Table:
     )
 
 
-# -- admin-backed shell commands (shell/commands/{alter,describe,list,
-# truncate,exists}.rb) -------------------------------------------------
+def shell_set_visibility(
+    table,
+    expression: str,
+    *,
+    family: str | None = None,
+    qualifier=None,
+    row_prefix: str | None = None,
+    label_col: str = "labels",
+):
+    """shell `set_visibility 't', 'expr', {...criteria}`
+    (set_visibility.rb; VisibilityController's setCellVisibility write
+    path): stamp the visibility expression onto every existing cell
+    matching the criteria.  Returns a Table whose cell frame carries
+    the (new or updated) label column — one codegen'd conditional
+    projection, no shuffle.  The expression is validated with the
+    shared parser before any plan is built."""
+    from hbase_spark.functions.visibility import evaluate
+
+    evaluate(expression, frozenset())  # syntax check (result unused)
+    cells = table.cells
+    match = F.lit(True)
+    if family is not None:
+        match = match & (F.col("family") == family)
+    if qualifier is not None:
+        match = match & (F.col("qualifier") == qualifier)
+    if row_prefix is not None:
+        match = match & F.col("row").startswith(row_prefix)
+    existing = (
+        F.col(label_col) if label_col in cells.columns
+        else F.lit(None).cast("string")
+    )
+    out = cells.withColumn(
+        label_col, F.when(match, F.lit(expression)).otherwise(existing)
+    )
+    return Table(out, table.families, table.now)
 
 
-def shell_alter(admin, name: str, spec: dict) -> None:
+# -- commands that need no table or admin (show_filters.rb,
+# table_help.rb) --------------------------------------------------------
+
+# ParseFilter registry names (filter/ParseFilter.java:52-100) — the
+# filters the string DSL can construct (show_filters prints this list)
+SUPPORTED_FILTERS = [
+    "ColumnCountGetFilter", "ColumnPaginationFilter", "ColumnPrefixFilter",
+    "ColumnRangeFilter", "ColumnValueFilter", "DependentColumnFilter",
+    "FamilyFilter", "FilterList", "FirstKeyOnlyFilter", "FuzzyRowFilter",
+    "InclusiveStopFilter", "KeyOnlyFilter", "MultiRowRangeFilter",
+    "MultipleColumnPrefixFilter", "PageFilter", "PrefixFilter",
+    "QualifierFilter", "RandomRowFilter", "RowFilter",
+    "SingleColumnValueExcludeFilter", "SingleColumnValueFilter",
+    "SkipFilter", "TimestampsFilter", "ValueFilter", "WhileMatchFilter",
+]
+
+
+def shell_show_filters(admin=None) -> list[str]:
+    """shell `show_filters` — the ParseFilter-constructible filters."""
+    return list(SUPPORTED_FILTERS)
+
+
+def shell_table_help() -> str:
+    """shell `table_help` (table_help.rb)."""
+    from hbase_spark.topology import table_help
+
+    return table_help()
+
+
+# -- admin commands with logic of their own: they reshape their
+# arguments or combine several Admin calls.  Each is registered in
+# SHELL below and reached through shell(admin, cmd, ...). ---------------
+
+
+def _alter(admin, name: str, spec: dict) -> None:
     """shell `alter 't', NAME => 'f', VERSIONS => 3, TTL => ...` —
     spec keys: NAME (family, required), VERSIONS, MIN_VERSIONS, TTL
     (seconds, like the shell), NEW_VERSION_BEHAVIOR, KEEP_DELETED_CELLS,
@@ -218,7 +292,7 @@ def shell_alter(admin, name: str, spec: dict) -> None:
     )
 
 
-def shell_describe(admin, name: str) -> dict:
+def _describe(admin, name: str) -> dict:
     """shell `describe` — family schema in shell keyword form."""
     desc = admin.describe(name)
     return {
@@ -236,209 +310,13 @@ def shell_describe(admin, name: str) -> dict:
     }
 
 
-def shell_list(admin) -> list[str]:
-    """shell `list`."""
-    return admin.list_tables()
-
-
-def shell_truncate(admin, name: str) -> None:
-    """shell `truncate`."""
-    admin.truncate_table(name)
-
-
-def shell_exists(admin, name: str) -> bool:
-    """shell `exists`."""
-    return admin.table_exists(name)
-
-
-# -- snapshot + namespace shell commands (shell/commands/{snapshot,
-# clone_snapshot,restore_snapshot,delete_snapshot,list_snapshots,
-# create_namespace,describe_namespace,list_namespace,
-# drop_namespace}.rb) --------------------------------------------------
-
-
-def shell_snapshot(admin, table_name: str, snapshot_name: str) -> None:
-    """shell `snapshot 't', 'snap'`."""
+def _snapshot(admin, table_name: str, snapshot_name: str) -> None:
+    """shell `snapshot 't', 'snap'` — the shell names the table first,
+    Admin.snapshot the snapshot."""
     admin.snapshot(snapshot_name, table_name)
 
 
-def shell_clone_snapshot(admin, snapshot_name: str, table_name: str) -> None:
-    """shell `clone_snapshot 'snap', 't2'`."""
-    admin.clone_snapshot(snapshot_name, table_name)
-
-
-def shell_restore_snapshot(admin, snapshot_name: str) -> None:
-    """shell `restore_snapshot 'snap'` (table must be disabled)."""
-    admin.restore_snapshot(snapshot_name)
-
-
-def shell_delete_snapshot(admin, snapshot_name: str) -> None:
-    """shell `delete_snapshot 'snap'`."""
-    admin.delete_snapshot(snapshot_name)
-
-
-def shell_list_snapshots(admin) -> list[str]:
-    """shell `list_snapshots`."""
-    return admin.list_snapshots()
-
-
-def shell_create_namespace(admin, ns: str) -> None:
-    """shell `create_namespace 'ns'`."""
-    admin.create_namespace(ns)
-
-
-def shell_describe_namespace(admin, ns: str) -> dict:
-    """shell `describe_namespace 'ns'`."""
-    return admin.describe_namespace(ns)
-
-
-def shell_list_namespace(admin) -> list[str]:
-    """shell `list_namespace`."""
-    return admin.list_namespaces()
-
-
-def shell_drop_namespace(admin, ns: str) -> None:
-    """shell `drop_namespace 'ns'` (must be empty)."""
-    admin.drop_namespace(ns)
-
-
-# -- table state / schema / region commands (shell/commands/{enable,
-# disable,is_enabled,is_disabled,list_enabled_tables,list_disabled_tables,
-# clone_table_schema,major_compact,list_regions,get_splits,
-# locate_region}.rb) ----------------------------------------------------
-
-
-def shell_enable(admin, name: str) -> None:
-    """shell `enable 't'`."""
-    admin.enable_table(name)
-
-
-def shell_disable(admin, name: str) -> None:
-    """shell `disable 't'`."""
-    admin.disable_table(name)
-
-
-def shell_is_enabled(admin, name: str) -> bool:
-    """shell `is_enabled 't'`."""
-    return admin.is_table_enabled(name)
-
-
-def shell_is_disabled(admin, name: str) -> bool:
-    """shell `is_disabled 't'`."""
-    return admin.is_table_disabled(name)
-
-
-def shell_list_enabled_tables(admin) -> list[str]:
-    """shell `list_enabled_tables`."""
-    return admin.list_enabled_tables()
-
-
-def shell_list_disabled_tables(admin) -> list[str]:
-    """shell `list_disabled_tables`."""
-    return admin.list_disabled_tables()
-
-
-def shell_clone_table_schema(admin, src: str, dst: str) -> None:
-    """shell `clone_table_schema 'src', 'dst'` (schema only, no data)."""
-    admin.clone_table_schema(src, dst)
-
-
-def shell_major_compact(admin, name: str, *, now: int | None = None) -> None:
-    """shell `major_compact 't'`."""
-    admin.major_compact(name, now=now)
-
-
-def shell_list_regions(admin, name: str) -> DataFrame:
-    """shell `list_regions 't'`."""
-    return admin.list_regions(name)
-
-
-def shell_get_splits(admin, name: str) -> list[str]:
-    """shell `get_splits 't'`."""
-    return admin.get_splits(name)
-
-
-def shell_locate_region(admin, name: str, row) -> dict:
-    """shell `locate_region 't', 'row'`."""
-    return admin.locate_region(name, row)
-
-
-def shell_split(admin, name: str, split_point) -> None:
-    """shell `split 't', 'splitkey'` (shell/commands/split.rb)."""
-    admin.split_region(name, split_point)
-
-
-def shell_merge_region(admin, name: str, row_a, row_b) -> None:
-    """shell `merge_region` — regions addressed by a row they contain
-    (the encoded-region-name analog)."""
-    admin.merge_region(name, row_a, row_b)
-
-
-# -- visibility label commands (shell/commands/{add_labels,list_labels,
-# set_auths,get_auths,clear_auths}.rb) ----------------------------------
-
-
-def shell_add_labels(admin, labels: list[str]) -> None:
-    """shell `add_labels ['A', 'B']`."""
-    admin.add_labels(labels)
-
-
-def shell_list_labels(admin) -> list[str]:
-    """shell `list_labels`."""
-    return admin.list_labels()
-
-
-def shell_set_auths(admin, user: str, labels: list[str]) -> None:
-    """shell `set_auths 'user', ['A']`."""
-    admin.set_auths(user, labels)
-
-
-def shell_get_auths(admin, user: str) -> list[str]:
-    """shell `get_auths 'user'`."""
-    return admin.get_auths(user)
-
-
-def shell_clear_auths(admin, user: str, labels: list[str] | None = None) -> None:
-    """shell `clear_auths 'user'`."""
-    admin.clear_auths(user, labels)
-
-
-def shell_list_namespace_tables(admin, ns: str) -> list[str]:
-    """shell `list_namespace_tables 'ns'`."""
-    return admin.list_namespace_tables(ns)
-
-
-def shell_delete_table_snapshots(admin, table: str) -> list[str]:
-    """shell `delete_table_snapshots 't'`."""
-    return admin.delete_table_snapshots(table)
-
-
-def shell_delete_all_snapshot(admin, regex: str) -> list[str]:
-    """shell `delete_all_snapshot 'regex'`."""
-    return admin.delete_all_snapshot(regex)
-
-
-def shell_export_snapshot(admin, snapshot_name: str, dest_admin) -> None:
-    """shell/tool `ExportSnapshot 'snap', <dest catalog>`."""
-    admin.export_snapshot(snapshot_name, dest_admin)
-
-
-def shell_grant(admin, user: str, perms: str, table: str | None = None) -> None:
-    """shell `grant 'user', 'RW'[, 't']`."""
-    admin.grant(user, perms, table)
-
-
-def shell_revoke(admin, user: str, table: str | None = None) -> None:
-    """shell `revoke 'user'[, 't']`."""
-    admin.revoke(user, table)
-
-
-def shell_user_permission(admin, table: str | None = None) -> dict:
-    """shell `user_permission ['t']`."""
-    return admin.user_permission(table)
-
-
-def shell_set_quota(admin, **kw) -> None:
+def _set_quota(admin, **kw) -> None:
     """shell `set_quota` (shell/commands/set_quota.rb; quota args in
     hbase-shell/src/main/ruby/hbase/quotas.rb).
 
@@ -473,12 +351,7 @@ def shell_set_quota(admin, **kw) -> None:
         raise ValueError(f"unknown set_quota args {sorted(kw)}")
 
 
-def shell_list_quotas(admin) -> dict:
-    """shell `list_quotas`."""
-    return admin.list_quotas()
-
-
-def shell_list_quota_snapshots(admin) -> dict:
+def _list_quota_snapshots(admin) -> dict:
     """shell `list_quota_snapshots` — per-table usage/limit/violation
     (QuotaObserverChore view)."""
     return {
@@ -488,7 +361,7 @@ def shell_list_quota_snapshots(admin) -> dict:
     }
 
 
-def shell_status(admin, fmt: str = "summary") -> dict:
+def _status(admin, fmt: str = "summary") -> dict:
     """shell `status` (shell/commands/status.rb).
 
     There is one "server" — the Spark application.  'summary' gives
@@ -518,7 +391,7 @@ def shell_status(admin, fmt: str = "summary") -> dict:
     return out
 
 
-def shell_processlist(admin) -> list[dict]:
+def _processlist(admin) -> list[dict]:
     """shell `processlist` — active work in the engine: running Spark
     job groups (statusTracker) plus active streaming queries."""
     sc = admin.spark.sparkContext
@@ -537,12 +410,12 @@ def shell_processlist(admin) -> list[dict]:
     return procs
 
 
-def shell_version(admin) -> str:
+def _version(admin) -> str:
     """shell `version` — engine + Spark version string."""
     return f"hbase_spark on Spark {admin.spark.version}"
 
 
-def shell_whoami(admin, user: str = "default") -> dict:
+def _whoami(admin, user: str = "default") -> dict:
     """shell `whoami` — the acting user with its auths and grants."""
     return {
         "user": user,
@@ -551,7 +424,7 @@ def shell_whoami(admin, user: str = "default") -> dict:
     }
 
 
-def shell_create(admin, name: str, *families, SPLITS=None, **fam_kw) -> None:
+def _create(admin, name: str, *families, SPLITS=None, **fam_kw) -> None:
     """shell `create 't', 'f1', {NAME=>'f2', VERSIONS=>3},
     SPLITS => ['b','m']` (shell/commands/create.rb).
 
@@ -582,7 +455,7 @@ def shell_create(admin, name: str, *families, SPLITS=None, **fam_kw) -> None:
     admin.create_table(name, fams, splits=SPLITS)
 
 
-def shell_truncate_preserve(admin, name: str) -> None:
+def _truncate_preserve(admin, name: str) -> None:
     """shell `truncate_preserve` (truncate_preserve.rb): drop all data
     but keep the region boundaries.  Declared split points live in the
     descriptor, which truncate keeps — so the next flush re-creates
@@ -595,19 +468,14 @@ def shell_truncate_preserve(admin, name: str) -> None:
     admin.truncate_table(name)
 
 
-def shell_flush(admin, name: str, table=None) -> None:
+def _flush(admin, name: str, table=None) -> None:
     """shell `flush 't'` — persist the table's current state (pass the
     mutated Table; without one this is a no-op rewrite of the current
     snapshot, the memstore-flush analog)."""
     admin.flush(name, table if table is not None else admin.table(name))
 
 
-def shell_get_table(admin, name: str):
-    """shell `get_table 't'` (get_table.rb) — the Table facade."""
-    return admin.table(name)
-
-
-def shell_top(admin, n: int = 10) -> list[dict]:
+def _top(admin, n: int = 10) -> list[dict]:
     """hbtop region-mode analog (hbase-hbtop): the n hottest regions
     by cell count across all enabled tables, with key ranges — the
     skew-spotting view (a hot region here is a salting/split
@@ -628,123 +496,29 @@ def shell_top(admin, n: int = 10) -> list[dict]:
     return sorted(rows, key=lambda x: -x["cells"])[:n]
 
 
-# -- normalizer / master switches (shell/commands/normalize.rb,
-# normalizer_switch.rb, normalizer_enabled.rb, splitormerge_switch.rb,
-# splitormerge_enabled.rb, balance_switch.rb, balancer_enabled.rb) ----
-
-
-def shell_normalize(admin, name: str, **plan_kw) -> list[dict]:
-    """shell `normalize` — run the region normalizer on one table."""
-    return admin.normalize(name, **plan_kw)
-
-
-def shell_normalizer_switch(admin, enabled: bool) -> bool:
-    """shell `normalizer_switch true|false` — returns previous state."""
-    return admin.set_switch("normalizer", enabled)
-
-
-def shell_normalizer_enabled(admin) -> bool:
-    return admin.is_switch_enabled("normalizer")
-
-
-def shell_splitormerge_switch(admin, kind: str, enabled: bool) -> bool:
-    """shell `splitormerge_switch 'SPLIT'|'MERGE', true|false`."""
+def _splitormerge_switch(admin, kind: str, enabled: bool) -> bool:
+    """shell `splitormerge_switch 'SPLIT'|'MERGE', true|false` —
+    returns the previous state."""
     return admin.set_switch(kind.lower(), enabled)
 
 
-def shell_splitormerge_enabled(admin, kind: str) -> bool:
+def _splitormerge_enabled(admin, kind: str) -> bool:
+    """shell `splitormerge_enabled 'SPLIT'|'MERGE'`."""
     return admin.is_switch_enabled(kind.lower())
 
 
-def shell_balance_switch(admin, enabled: bool) -> bool:
-    """shell `balance_switch true|false` — returns previous state."""
-    return admin.set_switch("balancer", enabled)
-
-
-def shell_balancer_enabled(admin) -> bool:
-    return admin.is_switch_enabled("balancer")
-
-
-# -- rsgroups (hbase-shell rsgroup commands: add_rsgroup.rb,
-# remove_rsgroup.rb, list_rsgroups.rb, get_rsgroup.rb,
-# move_servers_rsgroup.rb, move_tables_rsgroup.rb,
-# balance_rsgroup.rb, get_table_rsgroup.rb, get_server_rsgroup.rb,
-# remove_servers_rsgroup.rb) ------------------------------------------
-
-
-def shell_add_rsgroup(admin, group: str) -> None:
-    admin.add_rsgroup(group)
-
-
-def shell_remove_rsgroup(admin, group: str) -> None:
-    admin.remove_rsgroup(group)
-
-
-def shell_list_rsgroups(admin) -> dict:
-    return admin.list_rsgroups()
-
-
-def shell_get_rsgroup(admin, group: str) -> dict:
-    return admin.get_rsgroup(group)
-
-
-def shell_get_table_rsgroup(admin, name: str) -> str:
-    return admin.get_rsgroup_of_table(name)
-
-
-def shell_get_server_rsgroup(admin, server: str) -> str | None:
-    return admin.get_rsgroup_of_server(server)
-
-
-def shell_move_servers_rsgroup(admin, servers: list[str], group: str) -> None:
-    admin.move_servers_rsgroup(servers, group)
-
-
-def shell_move_tables_rsgroup(admin, tables: list[str], group: str) -> None:
-    admin.move_tables_rsgroup(tables, group)
-
-
-def shell_remove_servers_rsgroup(admin, servers: list[str]) -> None:
-    admin.remove_servers_rsgroup(servers)
-
-
-def shell_balance_rsgroup(admin, group: str, **kw) -> dict[str, int]:
-    return admin.balance_rsgroup(group, **kw)
-
-
-def shell_compact(admin, name: str, **kw) -> None:
-    """shell `compact 't'` (compact.rb) — minor compaction."""
-    admin.compact(name, **kw)
-
-
-def shell_compaction_state(admin, name: str) -> dict:
-    """shell `compaction_state 't'` (compaction_state.rb)."""
-    return admin.compaction_state(name)
-
-
-def shell_cleaner_chore_run(admin, **kw) -> dict:
-    """shell `cleaner_chore_run` (cleaner_chore_run.rb) — gated on the
-    cleaner_chore switch (cleaner_chore_switch.rb) — archive
-    cleanup of unreferenced layout version dirs."""
-    if not admin.is_switch_enabled("cleaner_chore"):
-        raise RuntimeError("master switch 'cleaner_chore' is disabled")
+def _switched_cleaner_chore(admin, switch: str, **kw) -> dict:
+    """shell `cleaner_chore_run` (cleaner_chore_run.rb) and
+    `catalogjanitor_run`: archive cleanup of unreferenced layout
+    version dirs (CatalogJanitor.java's cleanParent role maps to the
+    same immutable-dir reclaim), gated on the command's master
+    switch."""
+    if not admin.is_switch_enabled(switch):
+        raise RuntimeError(f"master switch {switch!r} is disabled")
     return admin.cleaner_chore(**kw)
 
 
-def shell_snapshot_cleanup_switch(admin, enabled: bool) -> bool:
-    """shell `snapshot_cleanup_switch true|false` — previous state."""
-    return admin.set_switch("snapshot_cleanup", enabled)
-
-
-def shell_snapshot_cleanup_enabled(admin) -> bool:
-    return admin.is_switch_enabled("snapshot_cleanup")
-
-
-# -- balancer / procedures / locks / wal / zk (balancer.rb,
-# list_procedures.rb, list_locks.rb, wal_roll.rb, zk_dump.rb) ----------
-
-
-def shell_balancer(admin, name: str | None = None, **kw) -> bool:
+def _balancer(admin, name: str | None = None, **kw) -> bool:
     """shell `balance` (balancer.rb): run the balancer now; returns
     True if it ran (i.e. the switch is on), like the reference shell.
     Keyword args pass through to Admin.balance (slop, dry_run)."""
@@ -752,561 +526,233 @@ def shell_balancer(admin, name: str | None = None, **kw) -> bool:
     return True
 
 
-def shell_balancer_report(admin, name: str | None = None) -> list[dict]:
-    """Layout-skew report backing `balance` — region mass histogram +
-    imbalance cost per table (the StochasticLoadBalancer cost view)."""
-    return admin.balancer_report(name)
-
-
-def shell_list_procedures(admin) -> list[dict]:
-    """shell `list_procedures` (list_procedures.rb)."""
-    return admin.list_procedures()
-
-
-def shell_list_locks(admin) -> list[dict]:
-    """shell `list_locks` (list_locks.rb)."""
-    return admin.list_locks()
-
-
-def shell_wal_roll(admin, log_dir: str) -> dict:
-    """shell `wal_roll 'server'` (wal_roll.rb) — here the roll target
-    is a mutation-log directory."""
-    return admin.wal_roll(log_dir)
-
-
-def shell_zk_dump(admin) -> dict:
-    """shell `zk_dump` (zk_dump.rb) — coordination-state dump."""
-    return admin.zk_dump()
-
-
-def shell_hbck_chore_run(admin, **kw) -> dict:
-    """shell `hbck_chore_run` (hbck_chore_run.rb / Admin.runHbckChore):
-    run the master's HbckChore consistency scan and return the report
-    (region overlaps, meta/fs family agreement, orphan version dirs,
-    broken snapshots, stuck procedures) — report-only, like the
-    reference chore."""
-    return admin.hbck(**kw)
-
-
-# -- round-5 data-touching scraps (show_filters.rb, get_counter.rb,
-# list_replicated_tables.rb, list_snapshot_sizes.rb,
-# list_quota_table_sizes.rb, compaction_switch.rb, catalogjanitor_*.rb,
-# get_balancer_decisions.rb, get_balancer_rejections.rb, peer cmds) ----
-
-# ParseFilter registry names (filter/ParseFilter.java:52-100) — the
-# filters the string DSL can construct (show_filters prints this list)
-SUPPORTED_FILTERS = [
-    "ColumnCountGetFilter", "ColumnPaginationFilter", "ColumnPrefixFilter",
-    "ColumnRangeFilter", "ColumnValueFilter", "DependentColumnFilter",
-    "FamilyFilter", "FilterList", "FirstKeyOnlyFilter", "FuzzyRowFilter",
-    "InclusiveStopFilter", "KeyOnlyFilter", "MultiRowRangeFilter",
-    "MultipleColumnPrefixFilter", "PageFilter", "PrefixFilter",
-    "QualifierFilter", "RandomRowFilter", "RowFilter",
-    "SingleColumnValueExcludeFilter", "SingleColumnValueFilter",
-    "SkipFilter", "TimestampsFilter", "ValueFilter", "WhileMatchFilter",
-]
-
-
-def shell_show_filters(admin=None) -> list[str]:
-    """shell `show_filters` — the ParseFilter-constructible filters."""
-    return list(SUPPORTED_FILTERS)
-
-
-def shell_list_replicated_tables(admin) -> list[str]:
-    return admin.list_replicated_tables()
-
-
-def shell_list_snapshot_sizes(admin) -> dict:
-    return admin.list_snapshot_sizes()
-
-
-def shell_list_quota_table_sizes(admin) -> dict:
-    return admin.list_quota_table_sizes()
-
-
-def shell_compaction_switch(admin, enabled: bool) -> bool:
-    """shell `compaction_switch true|false` — previous state."""
-    return admin.set_switch("compaction", enabled)
-
-
-def shell_catalogjanitor_switch(admin, enabled: bool) -> bool:
-    """shell `catalogjanitor_switch` — gates the janitor run (the
-    version-dir GC role the catalog janitor plays after split/merge)."""
-    return admin.set_switch("catalogjanitor", enabled)
-
-
-def shell_catalogjanitor_enabled(admin) -> bool:
-    return admin.is_switch_enabled("catalogjanitor")
-
-
-def shell_catalogjanitor_run(admin, **kw) -> dict:
-    """shell `catalogjanitor_run`: GC the version dirs split/merge/
-    flush left behind (CatalogJanitor.java's cleanParent role maps to
-    the same immutable-dir reclaim as the cleaner chore)."""
-    if not admin.is_switch_enabled("catalogjanitor"):
-        raise RuntimeError("master switch 'catalogjanitor' is disabled")
-    return admin.cleaner_chore(**kw)
-
-
-def shell_get_balancer_decisions(admin) -> list[dict]:
-    return admin.get_balancer_decisions()
-
-
-def shell_get_balancer_rejections(admin) -> list[dict]:
-    return admin.get_balancer_rejections()
-
-
-def shell_append_peer_table_cfs(admin, peer_id: str, table_cfs: dict) -> None:
-    admin.append_peer_table_cfs(peer_id, table_cfs)
-
-
-def shell_remove_peer_table_cfs(admin, peer_id: str, table_cfs: dict) -> None:
-    admin.remove_peer_table_cfs(peer_id, table_cfs)
-
-
-def shell_show_peer_table_cfs(admin, peer_id: str):
+def _show_peer_table_cfs(admin, peer_id: str):
     """shell `show_peer_tableCFs`."""
     return admin.get_peer_config(peer_id).get("table_cfs")
 
 
-def shell_transit_peer_sync_replication_state(
-    admin, peer_id: str, state: str
-) -> None:
-    """shell `transit_peer_sync_replication_state`
-    (transit_peer_sync_replication_state.rb) — round 9: previously a
-    needs-a-second-cluster scope-out; two catalogs now model the two
-    clusters (see Admin.transit_peer_sync_replication_state)."""
-    admin.transit_peer_sync_replication_state(peer_id, state)
-
-
-def shell_set_peer_bandwidth(admin, peer_id: str, bandwidth: int) -> None:
-    admin.set_peer_bandwidth(peer_id, bandwidth)
-
-
-def shell_set_peer_serial(admin, peer_id: str, serial: bool) -> None:
-    admin.set_peer_serial(peer_id, serial)
-
-
-def shell_list_peer_configs(admin) -> dict:
-    return admin.list_peer_configs()
-
-
-def shell_peer_modification_switch(admin, enabled: bool) -> bool:
-    """shell `peer_modification_switch` — previous state."""
-    return admin.set_switch("peer_modification", enabled)
-
-
-def shell_peer_modification_enabled(admin) -> bool:
-    return admin.is_switch_enabled("peer_modification")
-
-
-def shell_truncate_region(admin, name: str, row) -> None:
-    """shell `truncate_region 't', 'row'` (truncate_region.rb)."""
-    admin.truncate_region(name, row)
-
-
-# -- round-8 breadth: peer replication scope, rsgroup refinements,
-# batch table ops, throttle switches, misc introspection (closing the
-# shell-coverage partial; each maps 1:1 to a <command>.rb) ---------------
-
-
-def shell_set_peer_replicate_all(admin, peer_id: str, flag: bool) -> None:
-    """shell `set_peer_replicate_all` (set_peer_replicate_all.rb)."""
-    admin.set_peer_replicate_all(peer_id, flag)
-
-
-def shell_set_peer_namespaces(admin, peer_id: str, namespaces) -> None:
-    """shell `set_peer_namespaces` (set_peer_namespaces.rb)."""
-    admin.set_peer_namespaces(peer_id, namespaces)
-
-
-def shell_append_peer_namespaces(admin, peer_id: str, namespaces) -> None:
-    """shell `append_peer_namespaces`."""
-    admin.append_peer_namespaces(peer_id, namespaces)
-
-
-def shell_remove_peer_namespaces(admin, peer_id: str, namespaces) -> None:
-    """shell `remove_peer_namespaces`."""
-    admin.remove_peer_namespaces(peer_id, namespaces)
-
-
-def shell_set_peer_exclude_namespaces(admin, peer_id: str, namespaces) -> None:
-    """shell `set_peer_exclude_namespaces`."""
-    admin.set_peer_exclude_namespaces(peer_id, namespaces)
-
-
-def shell_append_peer_exclude_namespaces(admin, peer_id, namespaces) -> None:
-    """shell `append_peer_exclude_namespaces`."""
-    admin.append_peer_exclude_namespaces(peer_id, namespaces)
-
-
-def shell_remove_peer_exclude_namespaces(admin, peer_id, namespaces) -> None:
-    """shell `remove_peer_exclude_namespaces`."""
-    admin.remove_peer_exclude_namespaces(peer_id, namespaces)
-
-
-def shell_set_peer_exclude_table_cfs(admin, peer_id: str, table_cfs) -> None:
-    """shell `set_peer_exclude_tableCFs`."""
-    admin.set_peer_exclude_table_cfs(peer_id, table_cfs)
-
-
-def shell_append_peer_exclude_table_cfs(admin, peer_id, table_cfs) -> None:
-    """shell `append_peer_exclude_tableCFs`."""
-    admin.append_peer_exclude_table_cfs(peer_id, table_cfs)
-
-
-def shell_remove_peer_exclude_table_cfs(admin, peer_id, table_cfs) -> None:
-    """shell `remove_peer_exclude_tableCFs`."""
-    admin.remove_peer_exclude_table_cfs(peer_id, table_cfs)
-
-
-def shell_update_peer_config(admin, peer_id: str, **fields) -> dict:
-    """shell `update_peer_config` (update_peer_config.rb)."""
-    return admin.update_peer_config(peer_id, **fields)
-
-
-def shell_rename_rsgroup(admin, old: str, new: str) -> None:
-    """shell `rename_rsgroup` (rename_rsgroup.rb)."""
-    admin.rename_rsgroup(old, new)
-
-
-def shell_move_namespaces_rsgroup(admin, namespaces, target: str) -> None:
-    """shell `move_namespaces_rsgroup`."""
-    admin.move_namespaces_rsgroup(namespaces, target)
-
-
-def shell_get_namespace_rsgroup(admin, ns: str) -> str:
-    """shell `get_namespace_rsgroup`."""
-    return admin.get_namespace_rsgroup(ns)
-
-
-def shell_move_servers_tables_rsgroup(admin, servers, tables, target) -> None:
-    """shell `move_servers_tables_rsgroup`."""
-    admin.move_servers_tables_rsgroup(servers, tables, target)
-
-
-def shell_move_servers_namespaces_rsgroup(
-    admin, servers, namespaces, target
-) -> None:
-    """shell `move_servers_namespaces_rsgroup`."""
-    admin.move_servers_namespaces_rsgroup(servers, namespaces, target)
-
-
-def shell_alter_rsgroup_config(admin, group: str, props: dict) -> dict:
-    """shell `alter_rsgroup_config` / `update_rsgroup_config`."""
-    return admin.update_rsgroup_config(group, props)
-
-
-shell_update_rsgroup_config = shell_alter_rsgroup_config
-
-
-def shell_show_rsgroup_config(admin, group: str) -> dict:
-    """shell `show_rsgroup_config`."""
-    return admin.show_rsgroup_config(group)
-
-
-def shell_alter_namespace(admin, ns: str, props: dict) -> dict:
-    """shell `alter_namespace` (alter_namespace.rb)."""
-    return admin.alter_namespace(ns, props)
-
-
-def shell_enable_all(admin, regex: str) -> list[str]:
-    """shell `enable_all 'regex'` (enable_all.rb)."""
-    return admin.enable_all(regex)
-
-
-def shell_disable_all(admin, regex: str) -> list[str]:
-    """shell `disable_all 'regex'` (disable_all.rb)."""
-    return admin.disable_all(regex)
-
-
-def shell_drop(admin, name: str) -> None:
+def _drop(admin, name: str) -> None:
     """shell `drop 't'` (drop.rb) — delete a DISABLED table."""
     if admin.is_table_enabled(name):
         raise ValueError(f"table {name!r} must be disabled before drop")
     admin.delete_table(name)
 
 
-def shell_drop_all(admin, regex: str) -> list[str]:
-    """shell `drop_all 'regex'` (drop_all.rb)."""
-    return admin.drop_all(regex)
-
-
-def shell_list_table_snapshots(admin, table: str, regex: str = ".*"):
-    """shell `list_table_snapshots` (list_table_snapshots.rb)."""
-    return admin.list_table_snapshots(table, regex)
-
-
-def shell_list_security_capabilities(admin) -> list[str]:
-    """shell `list_security_capabilities`."""
-    return admin.list_security_capabilities()
-
-
-def shell_regioninfo(admin, name: str, row) -> dict:
-    """shell `regioninfo` (regioninfo.rb)."""
-    return admin.regioninfo(name, row)
-
-
-def shell_wal_roll_all(admin, log_dirs: list[str]) -> dict:
-    """shell `wal_roll_all` (wal_roll_all.rb)."""
-    return admin.wal_roll_all(log_dirs)
-
-
-def shell_enable_rpc_throttle(admin) -> bool:
-    """shell `enable_rpc_throttle` — previous state
-    (Admin.switchRpcThrottle(true))."""
-    return admin.set_switch("rpc_throttle", True)
-
-
-def shell_disable_rpc_throttle(admin) -> bool:
-    """shell `disable_rpc_throttle` — previous state.  While disabled
-    every throttle_limiter lookup returns None, so quota throttles
-    stop being enforced (the reference's quota-manager bypass)."""
-    return admin.set_switch("rpc_throttle", False)
-
-
-def shell_rpc_throttle_enabled(admin) -> bool:
-    """shell `rpc_throttle_enabled`."""
-    return admin.is_switch_enabled("rpc_throttle")
-
-
-def shell_cleaner_chore_switch(admin, enabled: bool) -> bool:
-    """shell `cleaner_chore_switch` — previous state; gates
-    cleaner_chore_run like the catalogjanitor pair."""
-    return admin.set_switch("cleaner_chore", enabled)
-
-
-def shell_cleaner_chore_enabled(admin) -> bool:
-    """shell `cleaner_chore_enabled`."""
-    return admin.is_switch_enabled("cleaner_chore")
-
-
-def shell_set_visibility(
-    table,
-    expression: str,
-    *,
-    family: str | None = None,
-    qualifier=None,
-    row_prefix: str | None = None,
-    label_col: str = "labels",
-):
-    """shell `set_visibility 't', 'expr', {...criteria}`
-    (set_visibility.rb; VisibilityController's setCellVisibility write
-    path): stamp the visibility expression onto every existing cell
-    matching the criteria.  Returns a Table whose cell frame carries
-    the (new or updated) label column — one codegen'd conditional
-    projection, no shuffle.  The expression is validated with the
-    shared parser before any plan is built."""
-    from pyspark.sql import functions as F
-
-    from hbase_spark.functions.visibility import evaluate
-    from hbase_spark.table import Table
-
-    evaluate(expression, frozenset())  # syntax check (result unused)
-    cells = table.cells
-    match = F.lit(True)
-    if family is not None:
-        match = match & (F.col("family") == family)
-    if qualifier is not None:
-        match = match & (F.col("qualifier") == qualifier)
-    if row_prefix is not None:
-        match = match & F.col("row").startswith(row_prefix)
-    existing = (
-        F.col(label_col) if label_col in cells.columns
-        else F.lit(None).cast("string")
-    )
-    out = cells.withColumn(
-        label_col, F.when(match, F.lit(expression)).otherwise(existing)
-    )
-    return Table(out, table.families, table.now)
-
-
-# -- server topology / assignment commands (the 34 server-lifecycle
-# commands COVERAGE.md previously scoped out; hbase_spark/topology.py
-# has the model: server registry + deterministic assignment map) -----------
-
-
-def shell_move(admin, encoded_region: str, server: str | None = None) -> str:
-    """shell `move` (move.rb) — returns the destination server."""
-    return admin.move(encoded_region, server)
-
-
-def shell_assign(admin, encoded_region: str):
-    """shell `assign` (assign.rb)."""
-    return admin.assign(encoded_region)
-
-
-def shell_unassign(admin, encoded_region: str, force=None) -> None:
+def _unassign(admin, encoded_region: str, force=None) -> None:
     """shell `unassign` (unassign.rb; the force flag is deprecated in
     the reference and ignored, same here)."""
     admin.unassign(encoded_region)
 
 
-def shell_close_region(admin, encoded_region: str,
-                       server: str | None = None) -> None:
-    """shell `close_region` (deprecated alias of unassign)."""
-    admin.close_region(encoded_region, server)
-
-
-def shell_rit(admin) -> list[dict]:
-    """shell `rit` (rit.rb)."""
-    return admin.rit()
-
-
-def shell_reopen_regions(admin, name: str) -> int:
-    """reopen a table's regions (refresh the layout's cached listing)."""
-    return admin.reopen_regions(name)
-
-
-def shell_list_liveservers(admin) -> list[str]:
-    """shell `list_liveservers`."""
-    return admin.list_liveservers()
-
-
-def shell_list_deadservers(admin) -> list[str]:
-    """shell `list_deadservers`."""
-    return admin.list_deadservers()
-
-
-def shell_list_unknownservers(admin) -> list[str]:
-    """shell `list_unknownservers`."""
-    return admin.list_unknownservers()
-
-
-def shell_list_decommissioned_regionservers(admin) -> list[str]:
-    """shell `list_decommissioned_regionservers`."""
-    return admin.list_decommissioned_regionservers()
-
-
-def shell_decommission_regionservers(admin, servers, offload=False) -> None:
-    """shell `decommission_regionservers`."""
+def _decommission_regionservers(admin, servers, offload=False) -> None:
+    """shell `decommission_regionservers` — one server or a list."""
     if isinstance(servers, str):
         servers = [servers]
     admin.decommission_regionservers(servers, offload)
 
 
-def shell_recommission_regionserver(admin, server: str,
-                                    encoded_regions=None) -> None:
-    """shell `recommission_regionserver`."""
-    admin.recommission_regionserver(server, encoded_regions)
-
-
-def shell_clear_deadservers(admin, *servers) -> list[str]:
+def _clear_deadservers(admin, *servers) -> list[str]:
     """shell `clear_deadservers` — returns servers NOT cleared."""
     return admin.clear_deadservers(list(servers) or None)
 
 
-def shell_stop_regionserver(admin, server: str) -> None:
-    """shell `stop_regionserver`."""
-    admin.stop_regionserver(server)
+# -- the command table: name -> (Admin method name | def above, *bound
+# leading arguments).  Every other argument passes straight through, so
+# a command's arguments and defaults are its Admin method's. -------------
+
+SHELL: dict[str, tuple] = {
+    # tables: DDL, state, schema (alter.rb, describe.rb, list.rb, ...)
+    "alter": (_alter,),
+    "describe": (_describe,),
+    "list": ("list_tables",),
+    "truncate": ("truncate_table",),
+    "exists": ("table_exists",),
+    "create": (_create,),
+    "truncate_preserve": (_truncate_preserve,),
+    "flush": (_flush,),
+    "get_table": ("table",),
+    "enable": ("enable_table",),
+    "disable": ("disable_table",),
+    "is_enabled": ("is_table_enabled",),
+    "is_disabled": ("is_table_disabled",),
+    "list_enabled_tables": ("list_enabled_tables",),
+    "list_disabled_tables": ("list_disabled_tables",),
+    "clone_table_schema": ("clone_table_schema",),
+    "enable_all": ("enable_all",),
+    "disable_all": ("disable_all",),
+    "drop": (_drop,),
+    "drop_all": ("drop_all",),
+    "alter_async": ("alter_async",),
+    "alter_status": ("alter_status",),
+    # snapshots (snapshot.rb, clone_snapshot.rb, restore_snapshot.rb, ...)
+    "snapshot": (_snapshot,),
+    "clone_snapshot": ("clone_snapshot",),
+    "restore_snapshot": ("restore_snapshot",),
+    "delete_snapshot": ("delete_snapshot",),
+    "list_snapshots": ("list_snapshots",),
+    "delete_table_snapshots": ("delete_table_snapshots",),
+    "delete_all_snapshot": ("delete_all_snapshot",),
+    "export_snapshot": ("export_snapshot",),
+    "list_table_snapshots": ("list_table_snapshots",),
+    "list_snapshot_sizes": ("list_snapshot_sizes",),
+    # namespaces (create_namespace.rb, alter_namespace.rb, ...)
+    "create_namespace": ("create_namespace",),
+    "describe_namespace": ("describe_namespace",),
+    "list_namespace": ("list_namespaces",),
+    "drop_namespace": ("drop_namespace",),
+    "list_namespace_tables": ("list_namespace_tables",),
+    "alter_namespace": ("alter_namespace",),
+    # regions and compaction (split.rb, merge_region.rb, compact.rb, ...)
+    "major_compact": ("major_compact",),
+    "list_regions": ("list_regions",),
+    "get_splits": ("get_splits",),
+    "locate_region": ("locate_region",),
+    "split": ("split_region",),
+    "merge_region": ("merge_region",),
+    "normalize": ("normalize",),
+    "compact": ("compact",),
+    "compaction_state": ("compaction_state",),
+    "truncate_region": ("truncate_region",),
+    "regioninfo": ("regioninfo",),
+    "top": (_top,),
+    # visibility labels and ACLs (add_labels.rb, grant.rb, ...)
+    "add_labels": ("add_labels",),
+    "list_labels": ("list_labels",),
+    "set_auths": ("set_auths",),
+    "get_auths": ("get_auths",),
+    "clear_auths": ("clear_auths",),
+    "grant": ("grant",),
+    "revoke": ("revoke",),
+    "user_permission": ("user_permission",),
+    "list_security_capabilities": ("list_security_capabilities",),
+    # quotas (set_quota.rb, list_quotas.rb, ...)
+    "set_quota": (_set_quota,),
+    "list_quotas": ("list_quotas",),
+    "list_quota_snapshots": (_list_quota_snapshots,),
+    "list_quota_table_sizes": ("list_quota_table_sizes",),
+    "enable_exceed_throttle_quota": ("enable_exceed_throttle_quota",),
+    "disable_exceed_throttle_quota": ("disable_exceed_throttle_quota",),
+    # cluster introspection (status.rb, processlist.rb, version.rb, ...)
+    "status": (_status,),
+    "processlist": (_processlist,),
+    "version": (_version,),
+    "whoami": (_whoami,),
+    "list_procedures": ("list_procedures",),
+    "list_locks": ("list_locks",),
+    "wal_roll": ("wal_roll",),
+    "wal_roll_all": ("wal_roll_all",),
+    "zk_dump": ("zk_dump",),
+    "hbck_chore_run": ("hbck",),
+    # master switches (*_switch.rb returns the previous state, *_enabled.rb)
+    "normalizer_switch": ("set_switch", "normalizer"),
+    "normalizer_enabled": ("is_switch_enabled", "normalizer"),
+    "splitormerge_switch": (_splitormerge_switch,),
+    "splitormerge_enabled": (_splitormerge_enabled,),
+    "balance_switch": ("set_switch", "balancer"),
+    "balancer_enabled": ("is_switch_enabled", "balancer"),
+    "snapshot_cleanup_switch": ("set_switch", "snapshot_cleanup"),
+    "snapshot_cleanup_enabled": ("is_switch_enabled", "snapshot_cleanup"),
+    "compaction_switch": ("set_switch", "compaction"),
+    "catalogjanitor_switch": ("set_switch", "catalogjanitor"),
+    "catalogjanitor_enabled": ("is_switch_enabled", "catalogjanitor"),
+    "peer_modification_switch": ("set_switch", "peer_modification"),
+    "peer_modification_enabled": ("is_switch_enabled", "peer_modification"),
+    "enable_rpc_throttle": ("set_switch", "rpc_throttle", True),
+    "disable_rpc_throttle": ("set_switch", "rpc_throttle", False),
+    "rpc_throttle_enabled": ("is_switch_enabled", "rpc_throttle"),
+    "cleaner_chore_switch": ("set_switch", "cleaner_chore"),
+    "cleaner_chore_enabled": ("is_switch_enabled", "cleaner_chore"),
+    # chores (cleaner_chore_run.rb, catalogjanitor_run.rb)
+    "cleaner_chore_run": (_switched_cleaner_chore, "cleaner_chore"),
+    "catalogjanitor_run": (_switched_cleaner_chore, "catalogjanitor"),
+    # balancer (balancer.rb, get_balancer_decisions.rb, ...)
+    "balancer": (_balancer,),
+    "balancer_report": ("balancer_report",),
+    "get_balancer_decisions": ("get_balancer_decisions",),
+    "get_balancer_rejections": ("get_balancer_rejections",),
+    # rsgroups (add_rsgroup.rb, move_servers_rsgroup.rb, ...)
+    "add_rsgroup": ("add_rsgroup",),
+    "remove_rsgroup": ("remove_rsgroup",),
+    "list_rsgroups": ("list_rsgroups",),
+    "get_rsgroup": ("get_rsgroup",),
+    "get_table_rsgroup": ("get_rsgroup_of_table",),
+    "get_server_rsgroup": ("get_rsgroup_of_server",),
+    "move_servers_rsgroup": ("move_servers_rsgroup",),
+    "move_tables_rsgroup": ("move_tables_rsgroup",),
+    "remove_servers_rsgroup": ("remove_servers_rsgroup",),
+    "balance_rsgroup": ("balance_rsgroup",),
+    "rename_rsgroup": ("rename_rsgroup",),
+    "move_namespaces_rsgroup": ("move_namespaces_rsgroup",),
+    "get_namespace_rsgroup": ("get_namespace_rsgroup",),
+    "move_servers_tables_rsgroup": ("move_servers_tables_rsgroup",),
+    "move_servers_namespaces_rsgroup": ("move_servers_namespaces_rsgroup",),
+    "alter_rsgroup_config": ("update_rsgroup_config",),
+    "update_rsgroup_config": ("update_rsgroup_config",),
+    "show_rsgroup_config": ("show_rsgroup_config",),
+    # replication peers (append_peer_tableCFs.rb, set_peer_bandwidth.rb, ...)
+    "list_replicated_tables": ("list_replicated_tables",),
+    "append_peer_table_cfs": ("append_peer_table_cfs",),
+    "remove_peer_table_cfs": ("remove_peer_table_cfs",),
+    "show_peer_table_cfs": (_show_peer_table_cfs,),
+    "transit_peer_sync_replication_state": ("transit_peer_sync_replication_state",),
+    "set_peer_bandwidth": ("set_peer_bandwidth",),
+    "set_peer_serial": ("set_peer_serial",),
+    "list_peer_configs": ("list_peer_configs",),
+    "set_peer_replicate_all": ("set_peer_replicate_all",),
+    "set_peer_namespaces": ("set_peer_namespaces",),
+    "append_peer_namespaces": ("append_peer_namespaces",),
+    "remove_peer_namespaces": ("remove_peer_namespaces",),
+    "set_peer_exclude_namespaces": ("set_peer_exclude_namespaces",),
+    "append_peer_exclude_namespaces": ("append_peer_exclude_namespaces",),
+    "remove_peer_exclude_namespaces": ("remove_peer_exclude_namespaces",),
+    "set_peer_exclude_table_cfs": ("set_peer_exclude_table_cfs",),
+    "append_peer_exclude_table_cfs": ("append_peer_exclude_table_cfs",),
+    "remove_peer_exclude_table_cfs": ("remove_peer_exclude_table_cfs",),
+    "update_peer_config": ("update_peer_config",),
+    # topology: region movement and server pools (move.rb, assign.rb, ...;
+    # hbase_spark/topology.py has the model)
+    "move": ("move",),
+    "assign": ("assign",),
+    "unassign": (_unassign,),
+    "close_region": ("close_region",),
+    "rit": ("rit",),
+    "reopen_regions": ("reopen_regions",),
+    "list_liveservers": ("list_liveservers",),
+    "list_deadservers": ("list_deadservers",),
+    "list_unknownservers": ("list_unknownservers",),
+    "list_decommissioned_regionservers": ("list_decommissioned_regionservers",),
+    "decommission_regionservers": (_decommission_regionservers,),
+    "recommission_regionserver": ("recommission_regionserver",),
+    "clear_deadservers": (_clear_deadservers,),
+    "stop_regionserver": ("stop_regionserver",),
+    "stop_master": ("stop_master",),
+    "is_in_maintenance_mode": ("is_in_maintenance_mode",),
+    # topology: diagnostics, caches, store files, config
+    "get_slowlog_responses": ("get_slowlog_responses",),
+    "get_largelog_responses": ("get_largelog_responses",),
+    "clear_slowlog_responses": ("clear_slowlog_responses",),
+    "trace": ("trace",),
+    "clear_block_cache": ("clear_block_cache",),
+    "clear_compaction_queues": ("clear_compaction_queues",),
+    "compact_rs": ("compact_regionserver",),
+    "flush_master_store": ("flush_master_store",),
+    "refresh_hfiles": ("refresh_hfiles",),
+    "refresh_meta": ("refresh_meta",),
+    "change_sft": ("change_sft",),
+    "change_sft_all": ("change_sft_all",),
+    "update_config": ("update_config",),
+    "update_all_config": ("update_all_config",),
+}
 
 
-def shell_stop_master(admin) -> None:
-    """shell `stop_master`."""
-    admin.stop_master()
-
-
-def shell_is_in_maintenance_mode(admin) -> bool:
-    """shell `is_in_maintenance_mode`."""
-    return admin.is_in_maintenance_mode()
-
-
-def shell_get_slowlog_responses(admin, servers="*", filters=None) -> list[dict]:
-    """shell `get_slowlog_responses`."""
-    return admin.get_slowlog_responses(servers, filters)
-
-
-def shell_get_largelog_responses(admin, servers="*", filters=None) -> list[dict]:
-    """shell `get_largelog_responses`."""
-    return admin.get_largelog_responses(servers, filters)
-
-
-def shell_clear_slowlog_responses(admin, servers=None) -> int:
-    """shell `clear_slowlog_responses`."""
-    return admin.clear_slowlog_responses(servers)
-
-
-def shell_trace(admin, startstop: str = "status",
-                spanname: str = "HBaseShell") -> bool:
-    """shell `trace` (trace.rb)."""
-    return admin.trace(startstop, spanname)
-
-
-def shell_clear_block_cache(admin, name: str) -> dict:
-    """shell `clear_block_cache`."""
-    return admin.clear_block_cache(name)
-
-
-def shell_clear_compaction_queues(admin, server: str,
-                                  queues=("long", "short")) -> int:
-    """shell `clear_compaction_queues`."""
-    return admin.clear_compaction_queues(server, queues)
-
-
-def shell_compact_rs(admin, server: str, major: bool = False) -> list[str]:
-    """shell `compact_rs` (compact_rs.rb)."""
-    return admin.compact_regionserver(server, major)
-
-
-def shell_flush_master_store(admin) -> dict:
-    """shell `flush_master_store`."""
-    return admin.flush_master_store()
-
-
-def shell_refresh_hfiles(admin, name: str) -> int:
-    """`refresh_hfiles` (RefreshHFilesEndpoint example)."""
-    return admin.refresh_hfiles(name)
-
-
-def shell_refresh_meta(admin) -> dict:
-    """shell `refresh_meta`."""
-    return admin.refresh_meta()
-
-
-def shell_change_sft(admin, name: str, family_or_tracker: str,
-                     tracker: str | None = None) -> None:
-    """shell `change_sft` (change_sft.rb)."""
-    admin.change_sft(name, family_or_tracker, tracker)
-
-
-def shell_change_sft_all(admin, tracker: str, pattern: str = ".*") -> list[str]:
-    """shell `change_sft_all`."""
-    return admin.change_sft_all(tracker, pattern)
-
-
-def shell_enable_exceed_throttle_quota(admin) -> bool:
-    """shell `enable_exceed_throttle_quota` — previous value."""
-    return admin.enable_exceed_throttle_quota()
-
-
-def shell_disable_exceed_throttle_quota(admin) -> bool:
-    """shell `disable_exceed_throttle_quota` — previous value."""
-    return admin.disable_exceed_throttle_quota()
-
-
-def shell_update_config(admin, server: str | None = None) -> dict:
-    """shell `update_config`."""
-    return admin.update_config(server)
-
-
-def shell_update_all_config(admin) -> dict:
-    """shell `update_all_config`."""
-    return admin.update_all_config()
-
-
-def shell_alter_async(admin, name: str, family: str, descriptor=None,
-                      *, method: str = "modify") -> int:
-    """shell `alter_async` — returns the procedure pid."""
-    return admin.alter_async(name, family, descriptor, method=method)
-
-
-def shell_alter_status(admin, name: str) -> dict:
-    """shell `alter_status` — regions updated / total."""
-    return admin.alter_status(name)
-
-
-def shell_table_help() -> str:
-    """shell `table_help` (table_help.rb)."""
-    from hbase_spark.topology import table_help
-
-    return table_help()
+def shell(admin, cmd: str, *args, **kw):
+    """Run the admin shell command ``cmd``: ``shell(admin, "list")`` is
+    the shell's ``list``, ``shell(admin, "balance_switch", False)`` its
+    ``balance_switch false``.  An unknown command raises ValueError."""
+    try:
+        target, *bound = SHELL[cmd]
+    except KeyError:
+        raise ValueError(f"unknown shell command {cmd!r}") from None
+    if isinstance(target, str):
+        return getattr(admin, target)(*bound, *args, **kw)
+    return target(admin, *bound, *args, **kw)

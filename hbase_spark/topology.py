@@ -1057,7 +1057,7 @@ TABLE_HELP = """Help for table-reference commands.
 You can either create a table via 'create' and then manipulate it via
 admin calls, or get a reference to a table with get_table:
 
-  t = admin.table('t')         # or shell_get_table(admin, 't')
+  t = admin.table('t')         # or shell(admin, 'get_table', 't')
 
 Data commands take the table reference first:
 
@@ -1072,7 +1072,8 @@ Data commands take the table reference first:
 
 Mutations return a NEW table value (tables are immutable frames);
 persist with admin.flush(name, t).  Admin commands (describe, alter,
-snapshots, quotas, rsgroups, topology) take the admin first.
+snapshots, quotas, rsgroups, topology) take the admin first and run
+through one dispatcher: shell(admin, 'describe', 't').
 """
 
 

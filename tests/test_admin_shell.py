@@ -94,43 +94,43 @@ def test_shell_scan_raw_and_timerange(catalog):
 
 
 def test_alter_modify_and_describe(catalog):
-    from hbase_spark.shell import shell_alter, shell_describe, shell_exists
+    from hbase_spark.shell import shell
 
     catalog.create_table("t7", ["f"])
-    shell_alter(catalog, "t7", {"NAME": "f", "VERSIONS": 3, "TTL": 60})
-    d = shell_describe(catalog, "t7")
+    shell(catalog, "alter", "t7", {"NAME": "f", "VERSIONS": 3, "TTL": 60})
+    d = shell(catalog, "describe", "t7")
     assert d["FAMILIES"]["f"]["VERSIONS"] == 3
     assert d["FAMILIES"]["f"]["TTL"] == 60
     # the opened Table picks up the altered knobs
     t = catalog.table("t7", now=0)
     assert t.families["f"].max_versions == 3
     assert t.families["f"].ttl_ms == 60_000
-    assert shell_exists(catalog, "t7") and not shell_exists(catalog, "nope")
+    assert shell(catalog, "exists", "t7") and not shell(catalog, "exists", "nope")
 
 
 def test_alter_add_and_delete_family(catalog):
-    from hbase_spark.shell import shell_alter, shell_describe, shell_put
+    from hbase_spark.shell import shell, shell_put
 
     catalog.create_table("t8", ["f"])
-    shell_alter(catalog, "t8", {"NAME": "g", "VERSIONS": 1})
-    assert set(shell_describe(catalog, "t8")["FAMILIES"]) == {"f", "g"}
+    shell(catalog, "alter", "t8", {"NAME": "g", "VERSIONS": 1})
+    assert set(shell(catalog, "describe", "t8")["FAMILIES"]) == {"f", "g"}
     t = catalog.table("t8")
     t = shell_put(t, "r", "f:q", "keep", ts=1, seq=1)
     t = shell_put(t, "r", "g:q", "drop", ts=1, seq=2)
     catalog.flush("t8", t, num_regions=2)
-    shell_alter(catalog, "t8", {"NAME": "g", "METHOD": "delete"})
+    shell(catalog, "alter", "t8", {"NAME": "g", "METHOD": "delete"})
     got = {r.family for r in catalog.table("t8").scan().collect()}
     assert got == {"f"}  # dropped family invisible immediately
 
 
 def test_truncate_keeps_schema(catalog):
-    from hbase_spark.shell import shell_put, shell_truncate
+    from hbase_spark.shell import shell, shell_put
 
     catalog.create_table("t9", ["f"])
     t = shell_put(catalog.table("t9"), "r", "f:q", "v", ts=1, seq=1)
     catalog.flush("t9", t, num_regions=2)
     assert catalog.table("t9").count() == 1
-    shell_truncate(catalog, "t9")
+    shell(catalog, "truncate", "t9")
     assert catalog.table("t9").count() == 0
     assert "f" in catalog.describe("t9")["families"]
 
@@ -169,29 +169,25 @@ def test_shell_deleteall_masks_whole_row(catalog):
 
 
 def test_snapshot_restore_point_in_time(catalog):
-    from hbase_spark.shell import (
-        shell_list_snapshots,
-        shell_restore_snapshot,
-        shell_snapshot,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_table("s1", ["f"])
     t = catalog.table("s1")
     t = shell_put(t, "r1", "f:a", "old", ts=10, seq=1)
     catalog.flush("s1", t, num_regions=2)
-    shell_snapshot(catalog, "s1", "snap-before")
+    shell(catalog, "snapshot", "s1", "snap-before")
     # mutate past the snapshot point
     t = catalog.table("s1")
     t = shell_put(t, "r1", "f:a", "new", ts=20, seq=2)
     t = shell_put(t, "r2", "f:a", "x", ts=20, seq=3)
     catalog.flush("s1", t, num_regions=2)
     assert shell_count(catalog.table("s1")) == 2
-    assert shell_list_snapshots(catalog) == ["snap-before"]
+    assert shell(catalog, "list_snapshots") == ["snap-before"]
     # restore requires disable, like the reference
     with pytest.raises(RuntimeError):
-        shell_restore_snapshot(catalog, "snap-before")
+        shell(catalog, "restore_snapshot", "snap-before")
     catalog.disable_table("s1")
-    shell_restore_snapshot(catalog, "snap-before")
+    shell(catalog, "restore_snapshot", "snap-before")
     catalog.enable_table("s1")
     back = catalog.table("s1")
     assert shell_count(back) == 1
@@ -201,15 +197,15 @@ def test_snapshot_restore_point_in_time(catalog):
 
 
 def test_clone_snapshot_is_zero_copy_and_cow(catalog):
-    from hbase_spark.shell import shell_clone_snapshot, shell_snapshot
+    from hbase_spark.shell import shell
 
     catalog.create_table("src", ["f"])
     t = catalog.table("src")
     for i in range(4):
         t = shell_put(t, f"r{i}", "f:a", str(i), ts=10, seq=i)
     catalog.flush("src", t, num_regions=2)
-    shell_snapshot(catalog, "src", "snap1")
-    shell_clone_snapshot(catalog, "snap1", "dst")
+    shell(catalog, "snapshot", "src", "snap1")
+    shell(catalog, "clone_snapshot", "snap1", "dst")
     # zero-copy: the clone reads the SAME parquet files as the source
     src_files = set(catalog.table("src").cells.inputFiles())
     dst_files = set(catalog.table("dst").cells.inputFiles())
@@ -225,48 +221,39 @@ def test_clone_snapshot_is_zero_copy_and_cow(catalog):
 
 def test_flush_preserves_snapshot_data(catalog):
     # versioned dirs: a flush AFTER the snapshot must not invalidate it
-    from hbase_spark.shell import shell_clone_snapshot, shell_snapshot
+    from hbase_spark.shell import shell
 
     catalog.create_table("v1", ["f"])
     t = catalog.table("v1")
     t = shell_put(t, "r", "f:a", "kept", ts=10, seq=1)
     catalog.flush("v1", t, num_regions=1)
-    shell_snapshot(catalog, "v1", "pinned")
+    shell(catalog, "snapshot", "v1", "pinned")
     for gen in range(2):  # two more flush generations
         t = catalog.table("v1")
         t = shell_put(t, f"g{gen}", "f:a", "later", ts=20 + gen, seq=10 + gen)
         catalog.flush("v1", t, num_regions=1)
-    shell_clone_snapshot(catalog, "pinned", "v1-at-snap")
+    shell(catalog, "clone_snapshot", "pinned", "v1-at-snap")
     assert shell_count(catalog.table("v1-at-snap")) == 1
     assert shell_count(catalog.table("v1")) == 3
 
 
 def test_delete_snapshot(catalog):
-    from hbase_spark.shell import (
-        shell_delete_snapshot,
-        shell_list_snapshots,
-        shell_snapshot,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_table("ds", ["f"])
-    shell_snapshot(catalog, "ds", "gone")
-    shell_delete_snapshot(catalog, "gone")
-    assert shell_list_snapshots(catalog) == []
+    shell(catalog, "snapshot", "ds", "gone")
+    shell(catalog, "delete_snapshot", "gone")
+    assert shell(catalog, "list_snapshots") == []
     with pytest.raises(ValueError):
         catalog.clone_snapshot("never-existed", "x")
 
 
 def test_namespace_lifecycle(catalog):
-    from hbase_spark.shell import (
-        shell_create_namespace,
-        shell_describe_namespace,
-        shell_drop_namespace,
-        shell_list_namespace,
-    )
+    from hbase_spark.shell import shell
 
-    shell_create_namespace(catalog, "prod")
-    assert shell_list_namespace(catalog) == ["default", "prod"]
-    assert shell_describe_namespace(catalog, "prod")["name"] == "prod"
+    shell(catalog, "create_namespace", "prod")
+    assert shell(catalog, "list_namespace") == ["default", "prod"]
+    assert shell(catalog, "describe_namespace", "prod")["name"] == "prod"
     catalog.create_table("prod:users", ["f"])
     t = catalog.table("prod:users")
     t = shell_put(t, "u1", "f:a", "1", ts=10, seq=1)
@@ -275,11 +262,11 @@ def test_namespace_lifecycle(catalog):
     assert "prod:users" in catalog.list_tables()
     # drop refuses while tables remain
     with pytest.raises(RuntimeError):
-        shell_drop_namespace(catalog, "prod")
+        shell(catalog, "drop_namespace", "prod")
     catalog.disable_table("prod:users")
     catalog.delete_table("prod:users")
-    shell_drop_namespace(catalog, "prod")
-    assert shell_list_namespace(catalog) == ["default"]
+    shell(catalog, "drop_namespace", "prod")
+    assert shell(catalog, "list_namespace") == ["default"]
     with pytest.raises(ValueError):
         catalog.create_namespace("bad/name")
 
@@ -289,28 +276,21 @@ def test_namespace_lifecycle(catalog):
 
 
 def test_table_state_commands(catalog):
-    from hbase_spark.shell import (
-        shell_disable,
-        shell_enable,
-        shell_is_disabled,
-        shell_is_enabled,
-        shell_list_disabled_tables,
-        shell_list_enabled_tables,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_table("st1", ["f"])
     catalog.create_table("st2", ["f"])
-    shell_disable(catalog, "st2")
-    assert shell_is_enabled(catalog, "st1")
-    assert shell_is_disabled(catalog, "st2")
-    assert shell_list_enabled_tables(catalog) == ["st1"]
-    assert shell_list_disabled_tables(catalog) == ["st2"]
-    shell_enable(catalog, "st2")
-    assert shell_is_enabled(catalog, "st2")
+    shell(catalog, "disable", "st2")
+    assert shell(catalog, "is_enabled", "st1")
+    assert shell(catalog, "is_disabled", "st2")
+    assert shell(catalog, "list_enabled_tables") == ["st1"]
+    assert shell(catalog, "list_disabled_tables") == ["st2"]
+    shell(catalog, "enable", "st2")
+    assert shell(catalog, "is_enabled", "st2")
 
 
 def test_clone_table_schema_copies_knobs_not_data(catalog):
-    from hbase_spark.shell import shell_clone_table_schema, shell_describe
+    from hbase_spark.shell import shell
 
     catalog.create_table(
         "src", {"f": FamilyDescriptor(max_versions=3, ttl_ms=5000)}
@@ -318,43 +298,39 @@ def test_clone_table_schema_copies_knobs_not_data(catalog):
     t = catalog.table("src")
     t = shell_put(t, "r", "f:q", "x", ts=10, seq=1)
     catalog.flush("src", t, num_regions=1)
-    shell_clone_table_schema(catalog, "src", "dst")
-    assert shell_describe(catalog, "dst")["FAMILIES"]["f"]["VERSIONS"] == 3
+    shell(catalog, "clone_table_schema", "src", "dst")
+    assert shell(catalog, "describe", "dst")["FAMILIES"]["f"]["VERSIONS"] == 3
     # TTL family -> reads need an explicit clock, like the source table
     assert shell_count(catalog.table("dst", now=100)) == 0
     assert shell_count(catalog.table("src", now=100)) == 1
     with pytest.raises(ValueError):
-        shell_clone_table_schema(catalog, "src", "dst")
+        shell(catalog, "clone_table_schema", "src", "dst")
 
 
 def test_list_regions_get_splits_locate_region(catalog):
-    from hbase_spark.shell import (
-        shell_get_splits,
-        shell_list_regions,
-        shell_locate_region,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_table("rg", ["f"])
     t = catalog.table("rg")
     for i in range(40):
         t = shell_put(t, f"{i:04d}", "f:q", str(i), ts=10, seq=i)
     catalog.flush("rg", t, num_regions=4)
-    regions = shell_list_regions(catalog, "rg").collect()
+    regions = shell(catalog, "list_regions", "rg").collect()
     assert 1 < len(regions) <= 4
     # ranges are disjoint and ordered
     for a, b in zip(regions, regions[1:]):
         assert a.end_key < b.start_key
     assert sum(r.cell_count for r in regions) == 40
-    splits = shell_get_splits(catalog, "rg")
+    splits = shell(catalog, "get_splits", "rg")
     assert splits == [r.start_key for r in regions][1:]
-    loc = shell_locate_region(catalog, "rg", "0000")
+    loc = shell(catalog, "locate_region", "rg", "0000")
     assert loc["start_key"] == regions[0].start_key
-    loc = shell_locate_region(catalog, "rg", "0039")
+    loc = shell(catalog, "locate_region", "rg", "0039")
     assert loc["end_key"] == regions[-1].end_key
 
 
 def test_major_compact_prunes_versions_and_tombstones(catalog):
-    from hbase_spark.shell import shell_major_compact
+    from hbase_spark.shell import shell
 
     catalog.create_table("mc", {"f": FamilyDescriptor(max_versions=1)})
     t = catalog.table("mc")
@@ -364,7 +340,7 @@ def test_major_compact_prunes_versions_and_tombstones(catalog):
     t = shell_delete(t, "r2", "f:q", ts=30, seq=4)
     catalog.flush("mc", t, num_regions=1)
     assert catalog.table("mc").cells.count() == 4  # raw: all cells + marker
-    shell_major_compact(catalog, "mc")
+    shell(catalog, "major_compact", "mc")
     after = catalog.table("mc")
     raw = after.cells.collect()
     # rewritten layout holds ONLY the visible snapshot: one cell
@@ -374,23 +350,17 @@ def test_major_compact_prunes_versions_and_tombstones(catalog):
 
 def test_visibility_label_registry_and_scan(catalog):
     from hbase_spark.functions.visibility import visible
-    from hbase_spark.shell import (
-        shell_add_labels,
-        shell_clear_auths,
-        shell_get_auths,
-        shell_list_labels,
-        shell_set_auths,
-    )
+    from hbase_spark.shell import shell
     from pyspark.sql import functions as F
 
-    shell_add_labels(catalog, ["secret", "pii", "public"])
-    assert shell_list_labels(catalog) == ["pii", "public", "secret"]
+    shell(catalog, "add_labels", ["secret", "pii", "public"])
+    assert shell(catalog, "list_labels") == ["pii", "public", "secret"]
     with pytest.raises(ValueError):
-        shell_add_labels(catalog, ["bad label!"])
-    shell_set_auths(catalog, "alice", ["secret", "public"])
+        shell(catalog, "add_labels", ["bad label!"])
+    shell(catalog, "set_auths", "alice", ["secret", "public"])
     with pytest.raises(ValueError):
-        shell_set_auths(catalog, "bob", ["unregistered"])
-    assert shell_get_auths(catalog, "alice") == ["public", "secret"]
+        shell(catalog, "set_auths", "bob", ["unregistered"])
+    assert shell(catalog, "get_auths", "alice") == ["public", "secret"]
     # auths drive the distributed visibility filter end to end
     catalog.create_table("vt", ["f"])
     t = catalog.table("vt")
@@ -402,12 +372,12 @@ def test_visibility_label_registry_and_scan(catalog):
             F.lit("public")
         ),
     )
-    seen = visible(cells, shell_get_auths(catalog, "alice"), label_col="vis")
+    seen = visible(cells, shell(catalog, "get_auths", "alice"), label_col="vis")
     assert [r.row for r in seen.select("row").collect()] == ["r1"]
-    shell_clear_auths(catalog, "alice", ["secret"])
-    assert shell_get_auths(catalog, "alice") == ["public"]
-    shell_clear_auths(catalog, "alice")
-    assert shell_get_auths(catalog, "alice") == []
+    shell(catalog, "clear_auths", "alice", ["secret"])
+    assert shell(catalog, "get_auths", "alice") == ["public"]
+    shell(catalog, "clear_auths", "alice")
+    assert shell(catalog, "get_auths", "alice") == []
 
 
 def test_get_options_count_filter_and_family_check(catalog):
@@ -440,58 +410,48 @@ def test_get_options_count_filter_and_family_check(catalog):
 
 
 def test_namespace_tables_and_snapshot_batch_deletes(catalog):
-    from hbase_spark.shell import (
-        shell_delete_all_snapshot,
-        shell_delete_table_snapshots,
-        shell_list_namespace_tables,
-        shell_list_snapshots,
-        shell_snapshot,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_namespace("prod")
     catalog.create_table("prod:a", ["f"])
     catalog.create_table("plain", ["f"])
-    assert shell_list_namespace_tables(catalog, "prod") == ["prod:a"]
-    assert shell_list_namespace_tables(catalog, "default") == ["plain"]
+    assert shell(catalog, "list_namespace_tables", "prod") == ["prod:a"]
+    assert shell(catalog, "list_namespace_tables", "default") == ["plain"]
     with pytest.raises(ValueError):
-        shell_list_namespace_tables(catalog, "ghost")
+        shell(catalog, "list_namespace_tables", "ghost")
     for snap in ("keep-1", "tmp-1", "tmp-2"):
-        shell_snapshot(catalog, "plain", snap)
-    shell_snapshot(catalog, "prod:a", "tmp-3")
-    assert shell_delete_all_snapshot(catalog, "tmp-[12]") == ["tmp-1", "tmp-2"]
-    assert shell_list_snapshots(catalog) == ["keep-1", "tmp-3"]
-    assert shell_delete_table_snapshots(catalog, "prod:a") == ["tmp-3"]
-    assert shell_list_snapshots(catalog) == ["keep-1"]
+        shell(catalog, "snapshot", "plain", snap)
+    shell(catalog, "snapshot", "prod:a", "tmp-3")
+    assert shell(catalog, "delete_all_snapshot", "tmp-[12]") == ["tmp-1", "tmp-2"]
+    assert shell(catalog, "list_snapshots") == ["keep-1", "tmp-3"]
+    assert shell(catalog, "delete_table_snapshots", "prod:a") == ["tmp-3"]
+    assert shell(catalog, "list_snapshots") == ["keep-1"]
 
 
 def test_export_snapshot_to_another_catalog(catalog, spark):
-    from hbase_spark.shell import (
-        shell_clone_snapshot,
-        shell_export_snapshot,
-        shell_snapshot,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_table("exp", {"f": FamilyDescriptor(max_versions=2)})
     t = catalog.table("exp")
     t = shell_put(t, "r1", "f:q", "v", ts=10, seq=1)
     catalog.flush("exp", t, num_regions=1)
-    shell_snapshot(catalog, "exp", "snap-x")
+    shell(catalog, "snapshot", "exp", "snap-x")
 
     d2 = tempfile.mkdtemp(prefix="hb_admin_dest_")
     try:
         dest = Admin(spark, d2)
-        shell_export_snapshot(catalog, "snap-x", dest)
+        shell(catalog, "export_snapshot", "snap-x", dest)
         assert dest.list_snapshots() == ["snap-x"]
         # destination can clone with no reference back to the source:
         # drop the source table and data path entirely
-        shell_clone_snapshot(dest, "snap-x", "restored")
+        shell(dest, "clone_snapshot", "snap-x", "restored")
         rt = dest.table("restored")
         assert {(r.row, r.value) for r in rt.snapshot().collect()} == {("r1", "v")}
         # clone keeps the exported family schema
         assert rt.families["f"].max_versions == 2
         # re-export refuses to overwrite existing data files
         with pytest.raises(Exception):
-            shell_export_snapshot(catalog, "snap-x", dest)
+            shell(catalog, "export_snapshot", "snap-x", dest)
     finally:
         shutil.rmtree(d2, ignore_errors=True)
 
@@ -515,30 +475,26 @@ def test_table_from_snapshot_reads_without_clone(catalog):
 
 def test_acl_grant_revoke_and_read_enforcement(catalog):
     from hbase_spark.admin import AccessDeniedError
-    from hbase_spark.shell import (
-        shell_grant,
-        shell_revoke,
-        shell_user_permission,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_table("sec", ["f"])
     t = shell_put(catalog.table("sec"), "r", "f:q", "v", ts=1, seq=1)
     catalog.flush("sec", t, num_regions=1)
     with pytest.raises(AccessDeniedError):
         catalog.table_as("alice", "sec")
-    shell_grant(catalog, "alice", "rw", "sec")  # letters normalize upper
-    assert shell_user_permission(catalog, "sec") == {"alice": "RW"}
+    shell(catalog, "grant", "alice", "rw", "sec")  # letters normalize upper
+    assert shell(catalog, "user_permission", "sec") == {"alice": "RW"}
     assert catalog.table_as("alice", "sec").count() == 1
     # global grant covers every table; per-table merges on top
-    shell_grant(catalog, "admin", "RWCA")
+    shell(catalog, "grant", "admin", "RWCA")
     assert catalog.check_permission("admin", "sec", "A")
     assert catalog.table_as("admin", "sec").count() == 1
     # revoke per-table removes only that scope
-    shell_revoke(catalog, "alice", "sec")
+    shell(catalog, "revoke", "alice", "sec")
     with pytest.raises(AccessDeniedError):
         catalog.table_as("alice", "sec")
     with pytest.raises(ValueError):
-        shell_grant(catalog, "bob", "RQ")
+        shell(catalog, "grant", "bob", "RQ")
 
 
 def test_shell_scan_rowprefixfilter(catalog):
@@ -778,7 +734,7 @@ def test_split_and_merge_region_preserve_data_and_pruning(catalog, spark):
     min/max pruning contract the layout is built on."""
     from pyspark.sql import functions as F
 
-    from hbase_spark.shell import shell_merge_region, shell_split
+    from hbase_spark.shell import shell
 
     catalog.create_table("geo", ["f"])
     t = catalog.table("geo")
@@ -788,7 +744,7 @@ def test_split_and_merge_region_preserve_data_and_pruning(catalog, spark):
     before = {r.row: r.value for r in catalog.table("geo").snapshot().collect()}
     n0 = catalog.list_regions("geo").count()
 
-    shell_split(catalog, "geo", "r015")
+    shell(catalog, "split", "geo", "r015")
     regions = catalog.list_regions("geo").collect()
     assert len(regions) == n0 + 1
     # daughters are disjoint around the split key
@@ -815,7 +771,7 @@ def test_split_and_merge_region_preserve_data_and_pruning(catalog, spark):
     assert touched <= overlapping and touched
 
     # merge the two daughters back into one region
-    shell_merge_region(catalog, "geo", "r010", "r015")
+    shell(catalog, "merge_region", "geo", "r010", "r015")
     merged = catalog.list_regions("geo").collect()
     assert len(merged) == n0
     assert {r.row: r.value
@@ -895,10 +851,10 @@ def test_canary_reports_health(catalog):
 def test_create_with_splits_controls_region_boundaries(catalog, spark):
     """shell `create ... SPLITS =>` / Admin.createTable(splitKeys):
     flushes land rows in the declared region ranges, pruning holds."""
-    from hbase_spark.shell import shell_create
+    from hbase_spark.shell import shell
 
-    shell_create(
-        catalog, "st", "f", {"NAME": "g", "VERSIONS": 2},
+    shell(
+        catalog, "create", "st", "f", {"NAME": "g", "VERSIONS": 2},
         SPLITS=["h", "p"],
     )
     t = catalog.table("st")
@@ -921,25 +877,20 @@ def test_create_with_splits_controls_region_boundaries(catalog, spark):
 
 
 def test_truncate_preserve_keeps_declared_splits(catalog, spark):
-    from hbase_spark.shell import (
-        shell_create,
-        shell_flush,
-        shell_get_table,
-        shell_truncate_preserve,
-    )
+    from hbase_spark.shell import shell
 
-    shell_create(catalog, "tp", "f", SPLITS=["m"])
-    t = shell_get_table(catalog, "tp")
+    shell(catalog, "create", "tp", "f", SPLITS=["m"])
+    t = shell(catalog, "get_table", "tp")
     for i, r in enumerate(["a", "z"]):
         t = shell_put(t, r, "f:q", "v", ts=10, seq=i)
-    shell_flush(catalog, "tp", t)
+    shell(catalog, "flush", "tp", t)
     assert len(catalog.list_regions("tp").collect()) == 2
-    shell_truncate_preserve(catalog, "tp")
-    assert shell_count(shell_get_table(catalog, "tp")) == 0
+    shell(catalog, "truncate_preserve", "tp")
+    assert shell_count(shell(catalog, "get_table", "tp")) == 0
     # boundaries survive: the next flush writes the same 2 region dirs
-    t2 = shell_put(shell_get_table(catalog, "tp"), "b", "f:q", "v", ts=20, seq=9)
+    t2 = shell_put(shell(catalog, "get_table", "tp"), "b", "f:q", "v", ts=20, seq=9)
     t2 = shell_put(t2, "x", "f:q", "v", ts=20, seq=10)
-    shell_flush(catalog, "tp", t2)
+    shell(catalog, "flush", "tp", t2)
     regions = catalog.list_regions("tp").collect()
     assert len(regions) == 2
     assert any(r.end_key < "m" for r in regions)
@@ -948,7 +899,7 @@ def test_truncate_preserve_keeps_declared_splits(catalog, spark):
 
     catalog.create_table("nosplits", ["f"])
     with _pt.raises(ValueError):
-        shell_truncate_preserve(catalog, "nosplits")
+        shell(catalog, "truncate_preserve", "nosplits")
 
 
 def test_locate_region_boundary_scan_cached_per_version(catalog):
@@ -1007,3 +958,269 @@ def test_local_catalog_state_io_avoids_spark_jobs(catalog, monkeypatch):
     catalog._read_topology()
     catalog.describe("fastio")
     assert called == []
+
+
+# -- the shell command table (shell.SHELL + shell()) ---------------------
+
+# Every shell command name the module offered as a ``shell_<name>`` def
+# before the admin commands became one table: 177 defs plus the
+# ``update_rsgroup_config`` alias.  None may disappear.
+SHELL_COMMANDS = frozenset({
+    "add_labels",
+    "add_rsgroup",
+    "alter",
+    "alter_async",
+    "alter_namespace",
+    "alter_rsgroup_config",
+    "alter_status",
+    "append",
+    "append_peer_exclude_namespaces",
+    "append_peer_exclude_table_cfs",
+    "append_peer_namespaces",
+    "append_peer_table_cfs",
+    "assign",
+    "balance_rsgroup",
+    "balance_switch",
+    "balancer",
+    "balancer_enabled",
+    "balancer_report",
+    "catalogjanitor_enabled",
+    "catalogjanitor_run",
+    "catalogjanitor_switch",
+    "change_sft",
+    "change_sft_all",
+    "cleaner_chore_enabled",
+    "cleaner_chore_run",
+    "cleaner_chore_switch",
+    "clear_auths",
+    "clear_block_cache",
+    "clear_compaction_queues",
+    "clear_deadservers",
+    "clear_slowlog_responses",
+    "clone_snapshot",
+    "clone_table_schema",
+    "close_region",
+    "compact",
+    "compact_rs",
+    "compaction_state",
+    "compaction_switch",
+    "count",
+    "create",
+    "create_namespace",
+    "decommission_regionservers",
+    "delete",
+    "delete_all_snapshot",
+    "delete_snapshot",
+    "delete_table_snapshots",
+    "deleteall",
+    "describe",
+    "describe_namespace",
+    "disable",
+    "disable_all",
+    "disable_exceed_throttle_quota",
+    "disable_rpc_throttle",
+    "drop",
+    "drop_all",
+    "drop_namespace",
+    "enable",
+    "enable_all",
+    "enable_exceed_throttle_quota",
+    "enable_rpc_throttle",
+    "exists",
+    "export_snapshot",
+    "flush",
+    "flush_master_store",
+    "get",
+    "get_auths",
+    "get_balancer_decisions",
+    "get_balancer_rejections",
+    "get_counter",
+    "get_largelog_responses",
+    "get_namespace_rsgroup",
+    "get_rsgroup",
+    "get_server_rsgroup",
+    "get_slowlog_responses",
+    "get_splits",
+    "get_table",
+    "get_table_rsgroup",
+    "grant",
+    "hbck_chore_run",
+    "incr",
+    "is_disabled",
+    "is_enabled",
+    "is_in_maintenance_mode",
+    "list",
+    "list_deadservers",
+    "list_decommissioned_regionservers",
+    "list_disabled_tables",
+    "list_enabled_tables",
+    "list_labels",
+    "list_liveservers",
+    "list_locks",
+    "list_namespace",
+    "list_namespace_tables",
+    "list_peer_configs",
+    "list_procedures",
+    "list_quota_snapshots",
+    "list_quota_table_sizes",
+    "list_quotas",
+    "list_regions",
+    "list_replicated_tables",
+    "list_rsgroups",
+    "list_security_capabilities",
+    "list_snapshot_sizes",
+    "list_snapshots",
+    "list_table_snapshots",
+    "list_unknownservers",
+    "locate_region",
+    "major_compact",
+    "merge_region",
+    "move",
+    "move_namespaces_rsgroup",
+    "move_servers_namespaces_rsgroup",
+    "move_servers_rsgroup",
+    "move_servers_tables_rsgroup",
+    "move_tables_rsgroup",
+    "normalize",
+    "normalizer_enabled",
+    "normalizer_switch",
+    "peer_modification_enabled",
+    "peer_modification_switch",
+    "processlist",
+    "put",
+    "recommission_regionserver",
+    "refresh_hfiles",
+    "refresh_meta",
+    "regioninfo",
+    "remove_peer_exclude_namespaces",
+    "remove_peer_exclude_table_cfs",
+    "remove_peer_namespaces",
+    "remove_peer_table_cfs",
+    "remove_rsgroup",
+    "remove_servers_rsgroup",
+    "rename_rsgroup",
+    "reopen_regions",
+    "restore_snapshot",
+    "revoke",
+    "rit",
+    "rpc_throttle_enabled",
+    "scan",
+    "set_auths",
+    "set_peer_bandwidth",
+    "set_peer_exclude_namespaces",
+    "set_peer_exclude_table_cfs",
+    "set_peer_namespaces",
+    "set_peer_replicate_all",
+    "set_peer_serial",
+    "set_quota",
+    "set_visibility",
+    "show_filters",
+    "show_peer_table_cfs",
+    "show_rsgroup_config",
+    "snapshot",
+    "snapshot_cleanup_enabled",
+    "snapshot_cleanup_switch",
+    "split",
+    "splitormerge_enabled",
+    "splitormerge_switch",
+    "status",
+    "stop_master",
+    "stop_regionserver",
+    "table_help",
+    "top",
+    "trace",
+    "transit_peer_sync_replication_state",
+    "truncate",
+    "truncate_preserve",
+    "truncate_region",
+    "unassign",
+    "update_all_config",
+    "update_config",
+    "update_peer_config",
+    "update_rsgroup_config",
+    "user_permission",
+    "version",
+    "wal_roll",
+    "wal_roll_all",
+    "whoami",
+    "zk_dump",
+})
+
+
+def test_shell_command_names_are_all_reachable():
+    import hbase_spark.shell as sh
+
+    table_first = {n.removeprefix("shell_") for n in vars(sh)
+                   if n.startswith("shell_")}
+    assert not table_first & set(sh.SHELL)
+    assert table_first | set(sh.SHELL) == SHELL_COMMANDS
+
+
+def test_shell_entries_dispatch_to_admin_methods():
+    """Each SHELL entry names a callable Admin attribute (or a def in
+    shell.py), and shell() passes the bound arguments first, then the
+    caller's, unchanged."""
+    from hbase_spark.shell import SHELL, shell
+
+    class Recorder:
+        def __getattr__(self, method):
+            return lambda *a, **kw: (method, a, kw)
+
+    for cmd, (target, *bound) in SHELL.items():
+        if not isinstance(target, str):
+            assert callable(target), cmd
+            continue
+        assert callable(getattr(Admin, target, None)), (cmd, target)
+        got = shell(Recorder(), cmd, "x", k=1)
+        assert got == (target, (*bound, "x"), {"k": 1}), cmd
+
+
+def test_shell_unknown_command_raises():
+    from hbase_spark.shell import shell
+
+    with pytest.raises(ValueError, match="no_such_cmd"):
+        shell(object(), "no_such_cmd")
+
+
+def test_shell_has_no_forwarding_defs():
+    """No def in shell.py is a one-call Admin forwarder that a SHELL
+    entry could express: a body (docstring aside) of one
+    ``admin.<m>(...)`` call whose arguments are constants followed by
+    the def's own parameters, in order."""
+    import ast
+    import pathlib
+
+    import hbase_spark.shell as sh
+
+    tree = ast.parse(pathlib.Path(sh.__file__).read_text())
+    forwarders = []
+    for node in tree.body:
+        if not isinstance(node, ast.FunctionDef):
+            continue
+        body = node.body
+        if isinstance(body[0], ast.Expr) and isinstance(
+                body[0].value, ast.Constant):
+            body = body[1:]
+        if len(body) != 1 or not isinstance(body[0], (ast.Expr, ast.Return)):
+            continue
+        call = body[0].value
+        if not (isinstance(call, ast.Call)
+                and isinstance(call.func, ast.Attribute)
+                and isinstance(call.func.value, ast.Name)
+                and call.func.value.id == "admin"):
+            continue
+        params = [a.arg for a in node.args.args[1:]]
+        args = list(call.args)
+        while args and isinstance(args[0], ast.Constant):
+            args.pop(0)
+        passed = [a.id if isinstance(a, ast.Name) else None for a in args]
+        kw_ok = all(
+            (k.arg is None and isinstance(k.value, ast.Name)
+             and node.args.kwarg is not None
+             and k.value.id == node.args.kwarg.arg)
+            or (isinstance(k.value, ast.Name) and k.value.id == k.arg)
+            for k in call.keywords
+        )
+        if passed == params and kw_ok:
+            forwarders.append(node.name)
+    assert forwarders == []

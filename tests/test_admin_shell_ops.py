@@ -38,14 +38,14 @@ def _write_log(spark, log_dir, rows, mode="overwrite"):
 
 
 def test_shell_top_orders_regions_by_heat(catalog):
-    from hbase_spark.shell import shell_top
+    from hbase_spark.shell import shell
 
     catalog.create_table("hot", ["f"])
     t = catalog.table("hot")
     for i in range(30):
         t = shell_put(t, f"k{i:02d}", "f:q", "v", ts=10, seq=i)
     catalog.flush("hot", t, num_regions=3)
-    top = shell_top(catalog, n=2)
+    top = shell(catalog, "top", n=2)
     assert len(top) == 2
     assert top[0]["cells"] >= top[1]["cells"]
     assert top[0]["table"] == "hot"
@@ -57,12 +57,7 @@ def test_shell_top_orders_regions_by_heat(catalog):
 
 
 def test_master_switches_gate_split_and_merge(catalog):
-    from hbase_spark.shell import (
-        shell_balance_switch,
-        shell_balancer_enabled,
-        shell_splitormerge_enabled,
-        shell_splitormerge_switch,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_table("sw", ["f"])
     t = catalog.table("sw")
@@ -70,22 +65,22 @@ def test_master_switches_gate_split_and_merge(catalog):
         t = shell_put(t, f"r{i:03d}", "f:q", str(i), ts=1, seq=i)
     catalog.flush("sw", t, num_regions=4)
 
-    assert shell_splitormerge_enabled(catalog, "SPLIT")
-    prev = shell_splitormerge_switch(catalog, "SPLIT", False)
+    assert shell(catalog, "splitormerge_enabled", "SPLIT")
+    prev = shell(catalog, "splitormerge_switch", "SPLIT", False)
     assert prev is True
     with pytest.raises(RuntimeError):
         catalog.split_region("sw", "r010")
-    shell_splitormerge_switch(catalog, "SPLIT", True)
+    shell(catalog, "splitormerge_switch", "SPLIT", True)
 
-    shell_splitormerge_switch(catalog, "MERGE", False)
+    shell(catalog, "splitormerge_switch", "MERGE", False)
     with pytest.raises(RuntimeError):
         catalog.merge_region("sw", "r000", "r015")
-    shell_splitormerge_switch(catalog, "MERGE", True)
+    shell(catalog, "splitormerge_switch", "MERGE", True)
 
-    assert shell_balancer_enabled(catalog)
-    assert shell_balance_switch(catalog, False) is True
-    assert not shell_balancer_enabled(catalog)
-    shell_balance_switch(catalog, True)
+    assert shell(catalog, "balancer_enabled")
+    assert shell(catalog, "balance_switch", False) is True
+    assert not shell(catalog, "balancer_enabled")
+    shell(catalog, "balance_switch", True)
 
 
 def test_normalizer_merges_small_and_splits_large_regions(catalog):
@@ -95,11 +90,7 @@ def test_normalizer_merges_small_and_splits_large_regions(catalog):
     rewritten geometry."""
     from pyspark.sql import functions as F
 
-    from hbase_spark.shell import (
-        shell_normalize,
-        shell_normalizer_enabled,
-        shell_normalizer_switch,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_table("norm", ["f"])
     t = catalog.table("norm")
@@ -118,13 +109,13 @@ def test_normalizer_merges_small_and_splits_large_regions(catalog):
     before = {r.row: r.value for r in catalog.table("norm").snapshot().collect()}
 
     # switch off -> normalize refuses
-    shell_normalizer_switch(catalog, False)
-    assert not shell_normalizer_enabled(catalog)
+    shell(catalog, "normalizer_switch", False)
+    assert not shell(catalog, "normalizer_enabled")
     with pytest.raises(RuntimeError):
         catalog.normalize("norm")
-    shell_normalizer_switch(catalog, True)
+    shell(catalog, "normalizer_switch", True)
 
-    plans = shell_normalize(catalog, "norm", merge_min_region_count=3)
+    plans = shell(catalog, "normalize", "norm", merge_min_region_count=3)
     kinds = {p["type"] for p in plans}
     assert "merge" in kinds and "split" in kinds
     regions = catalog.list_regions("norm").collect()
@@ -157,49 +148,39 @@ def test_normalizer_merges_small_and_splits_large_regions(catalog):
 
 
 def test_rsgroup_lifecycle_and_membership(catalog):
-    from hbase_spark.shell import (
-        shell_add_rsgroup,
-        shell_get_rsgroup,
-        shell_get_server_rsgroup,
-        shell_get_table_rsgroup,
-        shell_list_rsgroups,
-        shell_move_servers_rsgroup,
-        shell_move_tables_rsgroup,
-        shell_remove_rsgroup,
-        shell_remove_servers_rsgroup,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_table("ga", ["f"])
     catalog.create_table("gb", ["f"])
-    shell_add_rsgroup(catalog, "analytics")
+    shell(catalog, "add_rsgroup", "analytics")
     with pytest.raises(ValueError):
-        shell_add_rsgroup(catalog, "analytics")
+        shell(catalog, "add_rsgroup", "analytics")
     with pytest.raises(ValueError):
-        shell_add_rsgroup(catalog, "default")
+        shell(catalog, "add_rsgroup", "default")
 
-    shell_move_servers_rsgroup(catalog, ["s1:16020", "s2:16020"], "analytics")
-    shell_move_tables_rsgroup(catalog, ["ga"], "analytics")
-    assert shell_get_table_rsgroup(catalog, "ga") == "analytics"
-    assert shell_get_table_rsgroup(catalog, "gb") == "default"
-    assert shell_get_server_rsgroup(catalog, "s1:16020") == "analytics"
-    assert shell_get_server_rsgroup(catalog, "nope:1") is None
-    info = shell_get_rsgroup(catalog, "analytics")
+    shell(catalog, "move_servers_rsgroup", ["s1:16020", "s2:16020"], "analytics")
+    shell(catalog, "move_tables_rsgroup", ["ga"], "analytics")
+    assert shell(catalog, "get_table_rsgroup", "ga") == "analytics"
+    assert shell(catalog, "get_table_rsgroup", "gb") == "default"
+    assert shell(catalog, "get_server_rsgroup", "s1:16020") == "analytics"
+    assert shell(catalog, "get_server_rsgroup", "nope:1") is None
+    info = shell(catalog, "get_rsgroup", "analytics")
     assert info["servers"] == ["s1:16020", "s2:16020"]
     assert info["tables"] == ["ga"]
     # default group lists unassigned tables
-    assert "gb" in shell_list_rsgroups(catalog)["default"]["tables"]
+    assert "gb" in shell(catalog, "list_rsgroups")["default"]["tables"]
 
     # non-empty group cannot be removed; moving out empties it
     with pytest.raises(ValueError):
-        shell_remove_rsgroup(catalog, "analytics")
-    shell_move_tables_rsgroup(catalog, ["ga"], "default")
-    shell_remove_servers_rsgroup(catalog, ["s1:16020", "s2:16020"])
-    shell_remove_rsgroup(catalog, "analytics")
-    assert "analytics" not in shell_list_rsgroups(catalog)
+        shell(catalog, "remove_rsgroup", "analytics")
+    shell(catalog, "move_tables_rsgroup", ["ga"], "default")
+    shell(catalog, "remove_servers_rsgroup", ["s1:16020", "s2:16020"])
+    shell(catalog, "remove_rsgroup", "analytics")
+    assert "analytics" not in shell(catalog, "list_rsgroups")
     with pytest.raises(ValueError):
-        shell_move_tables_rsgroup(catalog, ["ga"], "gone")
+        shell(catalog, "move_tables_rsgroup", ["ga"], "gone")
     with pytest.raises(ValueError):
-        shell_move_tables_rsgroup(catalog, ["missing_table"], "default")
+        shell(catalog, "move_tables_rsgroup", ["missing_table"], "default")
 
 
 def test_balance_rsgroup_rebuckets_member_tables(catalog):
@@ -207,7 +188,7 @@ def test_balance_rsgroup_rebuckets_member_tables(catalog):
     group's capacity (servers x regions_per_server) — the
     RSGroupBasedLoadBalancer consequence with analytic teeth: moving a
     table to a bigger pool increases its physical parallelism."""
-    from hbase_spark.shell import shell_balance_rsgroup
+    from hbase_spark.shell import shell
 
     catalog.create_table("bt", ["f"])
     t = catalog.table("bt")
@@ -220,7 +201,7 @@ def test_balance_rsgroup_rebuckets_member_tables(catalog):
     catalog.move_servers_rsgroup(["a:1", "b:1", "c:1"], "pool")
     catalog.move_tables_rsgroup(["bt"], "pool")
     before = {r.row: r.value for r in catalog.table("bt").snapshot().collect()}
-    out = shell_balance_rsgroup(catalog, "pool", regions_per_server=2)
+    out = shell(catalog, "balance_rsgroup", "pool", regions_per_server=2)
     assert out == {"bt": 6}
     assert catalog.list_regions("bt").count() == 6
     assert {r.row: r.value
@@ -228,7 +209,7 @@ def test_balance_rsgroup_rebuckets_member_tables(catalog):
     # balancer switch gates it
     catalog.set_switch("balancer", False)
     with pytest.raises(RuntimeError):
-        shell_balance_rsgroup(catalog, "pool")
+        shell(catalog, "balance_rsgroup", "pool")
 
 
 def test_plan_normalization_property_laws():
@@ -288,7 +269,7 @@ def test_minor_compact_coalesces_without_dropping_cells(catalog):
     requested count as a new version dir, with every raw cell —
     including tombstones — retained (RatioBasedCompactionPolicy picks
     files; minor keeps deletes)."""
-    from hbase_spark.shell import shell_compact, shell_compaction_state
+    from hbase_spark.shell import shell
 
     catalog.create_table("mc", ["f"])
     t = catalog.table("mc")
@@ -300,7 +281,7 @@ def test_minor_compact_coalesces_without_dropping_cells(catalog):
     assert catalog.list_regions("mc").count() == 8
     v_before = catalog.describe("mc")["version"]
 
-    shell_compact(catalog, "mc", num_regions=2)
+    shell(catalog, "compact", "mc", num_regions=2)
     assert catalog.list_regions("mc").count() == 2
     # no cells dropped — the tombstone survives minor compaction
     assert catalog.table("mc").cells.count() == raw_before
@@ -308,7 +289,7 @@ def test_minor_compact_coalesces_without_dropping_cells(catalog):
     # visible data unchanged (r005 still masked)
     snap = {r.row for r in catalog.table("mc").snapshot().collect()}
     assert "r005" not in snap and len(snap) == 29
-    st = shell_compaction_state(catalog, "mc")
+    st = shell(catalog, "compaction_state", "mc")
     assert st["state"] == "NONE"
     assert st["version"] == v_before + 1
     assert st["regions"] == 2
@@ -319,7 +300,7 @@ def test_cleaner_chore_reclaims_unreferenced_version_dirs(catalog):
     version dirs are reclaimed only when neither a live descriptor nor
     a snapshot manifest references them; pinned dirs survive and the
     snapshot still restores afterwards."""
-    from hbase_spark.shell import shell_cleaner_chore_run
+    from hbase_spark.shell import shell
 
     catalog.create_table("cc", ["f"])
     t = catalog.table("cc")
@@ -332,20 +313,20 @@ def test_cleaner_chore_reclaims_unreferenced_version_dirs(catalog):
     t3 = shell_put(catalog.table("cc"), "r98", "f:q", "y", ts=3, seq=101)
     catalog.flush("cc", t3, num_regions=2)          # cells-v3 (live)
 
-    dry = shell_cleaner_chore_run(catalog, dry_run=True)
+    dry = shell(catalog, "cleaner_chore_run", dry_run=True)
     assert any(d.endswith("cells-v2") for d in dry["deleted"])
     assert any(k.endswith("cells-v1") for k in dry["kept"])    # snapshot pin
     assert any(k.endswith("cells-v3") for k in dry["kept"])    # live
     # dry run deleted nothing
     assert {r.row for r in catalog.table("cc").snapshot().collect()} >= {"r99"}
 
-    out = shell_cleaner_chore_run(catalog)
+    out = shell(catalog, "cleaner_chore_run")
     assert out["deleted"] == dry["deleted"]
     # live table intact, snapshot still restores to the pinned state
     assert {r.row for r in catalog.table("cc").snapshot().collect()} >= {"r98", "r99"}
     assert catalog.table_from_snapshot("pin").snapshot().count() == 10
     # idempotent: second run finds nothing new
-    assert shell_cleaner_chore_run(catalog)["deleted"] == []
+    assert shell(catalog, "cleaner_chore_run")["deleted"] == []
 
 
 def test_normalize_split_respects_key_prefix_groups(catalog):
@@ -403,11 +384,7 @@ def test_snapshot_ttl_cleanup_and_dir_reclaim(catalog):
     """SnapshotCleanerChore: TTL'd snapshots expire (switch-gated),
     non-TTL snapshots never do, and a follow-up cleaner_chore reclaims
     the version dir the expired snapshot was pinning."""
-    from hbase_spark.shell import (
-        shell_cleaner_chore_run,
-        shell_snapshot_cleanup_enabled,
-        shell_snapshot_cleanup_switch,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_table("sc", ["f"])
     t = catalog.table("sc")
@@ -420,20 +397,20 @@ def test_snapshot_ttl_cleanup_and_dir_reclaim(catalog):
     catalog.flush("sc", t2, num_regions=1)                     # v2 live
 
     # switch off -> nothing expires
-    shell_snapshot_cleanup_switch(catalog, False)
-    assert not shell_snapshot_cleanup_enabled(catalog)
+    shell(catalog, "snapshot_cleanup_switch", False)
+    assert not shell(catalog, "snapshot_cleanup_enabled")
     assert catalog.snapshot_cleaner_chore(now=10_000) == []
-    shell_snapshot_cleanup_switch(catalog, True)
+    shell(catalog, "snapshot_cleanup_switch", True)
 
     # before expiry: kept; after: only the TTL'd one goes
     assert catalog.snapshot_cleaner_chore(now=1030) == []
     assert catalog.snapshot_cleaner_chore(now=1060) == ["ephemeral"]
     assert catalog.list_snapshots() == ["forever"]
     # v1 is still pinned by 'forever'; delete it and the dir reclaims
-    kept = shell_cleaner_chore_run(catalog, dry_run=True)["kept"]
+    kept = shell(catalog, "cleaner_chore_run", dry_run=True)["kept"]
     assert any(k.endswith("cells-v1") for k in kept)
     catalog.delete_snapshot("forever")
-    deleted = shell_cleaner_chore_run(catalog)["deleted"]
+    deleted = shell(catalog, "cleaner_chore_run")["deleted"]
     assert any(d.endswith("cells-v1") for d in deleted)
     assert {r.row for r in catalog.table("sc").snapshot().collect()} == {
         "r0", "r1", "r2", "r3", "r4", "r9"
@@ -441,12 +418,7 @@ def test_snapshot_ttl_cleanup_and_dir_reclaim(catalog):
 
 
 def test_balancer_report_and_balance_even_out_skew(catalog, spark):
-    from hbase_spark.shell import (
-        shell_balance_switch,
-        shell_balancer,
-        shell_balancer_report,
-        shell_put,
-    )
+    from hbase_spark.shell import shell, shell_put
 
     catalog.create_table("tb", ["f"])
     t = catalog.table("tb")
@@ -456,7 +428,7 @@ def test_balancer_report_and_balance_even_out_skew(catalog, spark):
         t = shell_put(t, f"{i:04d}", "f:q", v, ts=10, seq=i)
     # all heavy keys below '0008': 4 range regions make region 0 heavy
     catalog.flush("tb", t, num_regions=4)
-    rep = {r["table"]: r for r in shell_balancer_report(catalog)}
+    rep = {r["table"]: r for r in shell(catalog, "balancer_report")}
     assert rep["tb"]["regions"] > 1
     assert rep["tb"]["imbalance"] > 1.2
     assert 0.0 < rep["tb"]["cost"] <= 1.0
@@ -466,7 +438,7 @@ def test_balancer_report_and_balance_even_out_skew(catalog, spark):
 
     done = catalog.balance()
     assert "tb" in done
-    rep2 = {r["table"]: r for r in shell_balancer_report(catalog)}
+    rep2 = {r["table"]: r for r in shell(catalog, "balancer_report")}
     assert rep2["tb"]["imbalance"] < rep["tb"]["imbalance"]
     # data intact after the rewrite
     from hbase_spark.shell import shell_count
@@ -474,18 +446,14 @@ def test_balancer_report_and_balance_even_out_skew(catalog, spark):
     assert shell_count(catalog.table("tb")) == 40
 
     # the balancer switch gates execution, like the reference
-    assert shell_balance_switch(catalog, False) is True
+    assert shell(catalog, "balance_switch", False) is True
     with pytest.raises(RuntimeError):
-        shell_balancer(catalog)
-    shell_balance_switch(catalog, True)
+        shell(catalog, "balancer")
+    shell(catalog, "balance_switch", True)
 
 
 def test_procedures_and_locks_journal_master_ops(catalog, spark):
-    from hbase_spark.shell import (
-        shell_list_locks,
-        shell_list_procedures,
-        shell_put,
-    )
+    from hbase_spark.shell import shell, shell_put
 
     catalog.create_table("tp", ["f"])
     t = catalog.table("tp")
@@ -497,7 +465,7 @@ def test_procedures_and_locks_journal_master_ops(catalog, spark):
     catalog.disable_table("tp")
     catalog.restore_snapshot("snap-tp")
 
-    procs = shell_list_procedures(catalog)
+    procs = shell(catalog, "list_procedures")
     types = [p["type"] for p in procs]
     assert "SPLIT_REGION" in types
     assert "RESTORE_SNAPSHOT" in types
@@ -507,10 +475,10 @@ def test_procedures_and_locks_journal_master_ops(catalog, spark):
     pids = [p["pid"] for p in procs]
     assert pids == sorted(pids) and len(set(pids)) == len(pids)
     # no in-flight procedures -> no locks
-    assert shell_list_locks(catalog) == []
+    assert shell(catalog, "list_locks") == []
     # an in-flight procedure holds an exclusive table lock
     with catalog._procedure("MERGE_TABLE_REGIONS", "tp"):
-        locks = shell_list_locks(catalog)
+        locks = shell(catalog, "list_locks")
         assert locks == [{
             "resource": "tp", "lock_type": "EXCLUSIVE",
             "proc_pid": locks[0]["proc_pid"],
@@ -520,7 +488,7 @@ def test_procedures_and_locks_journal_master_ops(catalog, spark):
     with pytest.raises(ValueError):
         with catalog._procedure("NORMALIZE", "tp"):
             raise ValueError("boom")
-    assert shell_list_procedures(catalog)[-1]["state"] == "ROLLEDBACK"
+    assert shell(catalog, "list_procedures")[-1]["state"] == "ROLLEDBACK"
     # HBCK2 bypass: a procedure wedged RUNNABLE (a crashed master's
     # leftover — simulated by writing the entry a dead session leaves)
     # is cleared and its table lock released; completed entries are
@@ -533,10 +501,10 @@ def test_procedures_and_locks_journal_master_ops(catalog, spark):
         "submitted_ts": 0.0, "completed_ts": None,
     })
     catalog._write_procs(procs)
-    assert shell_list_locks(catalog) != []
+    assert shell(catalog, "list_locks") != []
     assert catalog.hbck("tp", stuck_after_sec=60)["stuck_procedures"]
     assert catalog.bypass_procedure(dead_pid) is True
-    assert shell_list_locks(catalog) == []
+    assert shell(catalog, "list_locks") == []
     by = [p for p in catalog._read_procs() if p["pid"] == dead_pid][0]
     assert by["state"] == "BYPASSED" and by["completed_ts"] is not None
     done_pid = [p["pid"] for p in catalog._read_procs()
@@ -546,12 +514,12 @@ def test_procedures_and_locks_journal_master_ops(catalog, spark):
 
 
 def test_wal_roll_and_zk_dump(catalog, spark, tmp_path):
-    from hbase_spark.shell import shell_wal_roll, shell_zk_dump
+    from hbase_spark.shell import shell
 
     log_dir = str(tmp_path / "wal")
     df = spark.range(3).selectExpr("cast(id as string) as v")
     df.write.mode("overwrite").parquet(log_dir)
-    out = shell_wal_roll(catalog, log_dir)
+    out = shell(catalog, "wal_roll", log_dir)
     assert out["sealed"] >= 1
     import json as _json
 
@@ -559,11 +527,11 @@ def test_wal_roll_and_zk_dump(catalog, spark, tmp_path):
         man = _json.load(fh)
     assert len(man["sealed_files"]) == out["sealed"]
     # a second roll gets a new manifest sequence
-    out2 = shell_wal_roll(catalog, log_dir)
+    out2 = shell(catalog, "wal_roll", log_dir)
     assert out2["manifest"] != out["manifest"]
 
     catalog.create_table("tz", ["f"])
-    dump = shell_zk_dump(catalog)
+    dump = shell(catalog, "zk_dump")
     assert dump["tables"]["tz"] == "ENABLED"
     assert dump["switches"] == catalog._read_switches()
     assert dump["procedures_running"] == []
@@ -571,16 +539,9 @@ def test_wal_roll_and_zk_dump(catalog, spark, tmp_path):
 
 def test_round5_shell_scraps(catalog, spark):
     from hbase_spark.shell import (
-        shell_catalogjanitor_run,
-        shell_catalogjanitor_switch,
-        shell_compaction_switch,
-        shell_get_balancer_decisions,
-        shell_get_balancer_rejections,
+        shell,
         shell_get_counter,
         shell_incr,
-        shell_list_quota_table_sizes,
-        shell_list_replicated_tables,
-        shell_list_snapshot_sizes,
         shell_put,
         shell_show_filters,
     )
@@ -599,89 +560,81 @@ def test_round5_shell_scraps(catalog, spark):
     # snapshot / quota size listings are metadata walks over real dirs
     catalog.flush("t5", t, num_regions=2)
     catalog.snapshot("s5", "t5")
-    sizes = shell_list_snapshot_sizes(catalog)
+    sizes = shell(catalog, "list_snapshot_sizes")
     assert sizes["s5"] > 0
-    qsizes = shell_list_quota_table_sizes(catalog)
+    qsizes = shell(catalog, "list_quota_table_sizes")
     assert qsizes["t5"] >= sizes["s5"]
 
     # replicated-table listing follows family replication scope
-    assert shell_list_replicated_tables(catalog) == []
+    assert shell(catalog, "list_replicated_tables") == []
     catalog.enable_table_replication("t5")
-    assert shell_list_replicated_tables(catalog) == ["t5"]
+    assert shell(catalog, "list_replicated_tables") == ["t5"]
 
     # compaction switch gates both compactions
-    assert shell_compaction_switch(catalog, False) is True
+    assert shell(catalog, "compaction_switch", False) is True
     with pytest.raises(RuntimeError):
         catalog.compact("t5")
     with pytest.raises(RuntimeError):
         catalog.major_compact("t5")
-    shell_compaction_switch(catalog, True)
+    shell(catalog, "compaction_switch", True)
     catalog.compact("t5", num_regions=2)
 
     # catalog janitor honors its switch and reclaims like the chore
-    shell_catalogjanitor_switch(catalog, False)
+    shell(catalog, "catalogjanitor_switch", False)
     with pytest.raises(RuntimeError):
-        shell_catalogjanitor_run(catalog)
-    shell_catalogjanitor_switch(catalog, True)
-    out = shell_catalogjanitor_run(catalog, dry_run=True)
+        shell(catalog, "catalogjanitor_run")
+    shell(catalog, "catalogjanitor_switch", True)
+    out = shell(catalog, "catalogjanitor_run", dry_run=True)
     assert isinstance(out, dict)
 
     # balance journals decisions/rejections
     catalog.balance()
-    dec = shell_get_balancer_decisions(catalog)
-    rej = shell_get_balancer_rejections(catalog)
+    dec = shell(catalog, "get_balancer_decisions")
+    rej = shell(catalog, "get_balancer_rejections")
     assert dec == [] or all("table" in d for d in dec)
     assert any(r["table"] == "t5" for r in rej)  # even table -> rejected
 
 
 def test_round5_peer_config_refinements(catalog):
-    from hbase_spark.shell import (
-        shell_append_peer_table_cfs,
-        shell_list_peer_configs,
-        shell_peer_modification_switch,
-        shell_remove_peer_table_cfs,
-        shell_set_peer_bandwidth,
-        shell_set_peer_serial,
-        shell_show_peer_table_cfs,
-    )
+    from hbase_spark.shell import shell
 
     catalog.add_peer("p1", "/tmp/peer1", table_cfs={"ta": ["f"]})
-    shell_append_peer_table_cfs(catalog, "p1", {"ta": ["g"], "tb": None})
-    assert shell_show_peer_table_cfs(catalog, "p1") == {
+    shell(catalog, "append_peer_table_cfs", "p1", {"ta": ["g"], "tb": None})
+    assert shell(catalog, "show_peer_table_cfs", "p1") == {
         "ta": ["f", "g"], "tb": None,
     }
-    shell_remove_peer_table_cfs(catalog, "p1", {"ta": ["f"]})
-    assert shell_show_peer_table_cfs(catalog, "p1") == {
+    shell(catalog, "remove_peer_table_cfs", "p1", {"ta": ["f"]})
+    assert shell(catalog, "show_peer_table_cfs", "p1") == {
         "ta": ["g"], "tb": None,
     }
-    shell_remove_peer_table_cfs(catalog, "p1", {"ta": None, "tb": None})
-    assert shell_show_peer_table_cfs(catalog, "p1") is None
+    shell(catalog, "remove_peer_table_cfs", "p1", {"ta": None, "tb": None})
+    assert shell(catalog, "show_peer_table_cfs", "p1") is None
 
-    shell_set_peer_bandwidth(catalog, "p1", 1_000_000)
-    shell_set_peer_serial(catalog, "p1", True)
-    cfg = shell_list_peer_configs(catalog)["p1"]
+    shell(catalog, "set_peer_bandwidth", "p1", 1_000_000)
+    shell(catalog, "set_peer_serial", "p1", True)
+    cfg = shell(catalog, "list_peer_configs")["p1"]
     assert cfg["bandwidth"] == 1_000_000 and cfg["serial"] is True
 
     # the peer-modification switch gates every mutator
-    assert shell_peer_modification_switch(catalog, False) is True
+    assert shell(catalog, "peer_modification_switch", False) is True
     with pytest.raises(RuntimeError):
-        shell_set_peer_bandwidth(catalog, "p1", 5)
+        shell(catalog, "set_peer_bandwidth", "p1", 5)
     with pytest.raises(RuntimeError):
-        shell_append_peer_table_cfs(catalog, "p1", {"tc": None})
-    shell_peer_modification_switch(catalog, True)
+        shell(catalog, "append_peer_table_cfs", "p1", {"tc": None})
+    shell(catalog, "peer_modification_switch", True)
 
 
 def test_peer_bandwidth_throttles_replication(catalog, spark):
     import tempfile
 
     from hbase_spark.quotas import RpcThrottlingException
-    from hbase_spark.shell import shell_set_peer_bandwidth
+    from hbase_spark.shell import shell
 
     catalog.create_table("rb", ["f"])
     catalog.enable_table_replication("rb")
     dest = tempfile.mkdtemp(prefix="hb_peer_bw_")
     catalog.add_peer("bw", dest)
-    shell_set_peer_bandwidth(catalog, "bw", 1000)  # 1000 B/s
+    shell(catalog, "set_peer_bandwidth", "bw", 1000)  # 1000 B/s
 
     log = tempfile.mkdtemp(prefix="hb_log_bw_") + "/wal"
     _write_log(
@@ -712,7 +665,7 @@ def test_peer_bandwidth_throttles_replication(catalog, spark):
 
 
 def test_truncate_region_drops_only_that_region(catalog, spark):
-    from hbase_spark.shell import shell_count, shell_put, shell_truncate_region
+    from hbase_spark.shell import shell, shell_count, shell_put
 
     catalog.create_table("ttr", ["f"])
     t = catalog.table("ttr")
@@ -723,7 +676,7 @@ def test_truncate_region_drops_only_that_region(catalog, spark):
     assert len(regions) == 4
     victim = catalog.locate_region("ttr", "0000")
 
-    shell_truncate_region(catalog, "ttr", "0000")
+    shell(catalog, "truncate_region", "ttr", "0000")
     t2 = catalog.table("ttr")
     rows = {r.row for r in t2.snapshot().select("row").distinct().collect()}
     # every row OUTSIDE the victim region survives; the victim's are gone
@@ -776,14 +729,14 @@ def test_compact_selection_hooks_coalesce_only_selected(catalog, spark):
 
 
 def test_hbck_clean_catalog_reports_ok(catalog):
-    from hbase_spark.shell import shell_hbck_chore_run, shell_put
+    from hbase_spark.shell import shell, shell_put
 
     catalog.create_table("hk1", ["f"])
     t = catalog.table("hk1")
     for i in range(8):
         t = shell_put(t, f"r{i}", "f:q", f"v{i}", ts=10, seq=i)
     catalog.flush("hk1", t, num_regions=2)
-    rep = shell_hbck_chore_run(catalog)
+    rep = shell(catalog, "hbck_chore_run")
     assert rep["ok"], rep
     assert rep["overlaps"] == []
     # the pre-flush dir is cleanable archive, not an inconsistency
@@ -1005,123 +958,100 @@ def test_peer_replication_scope_refinements(catalog):
     *_peer_exclude_tableCFs / update_peer_config): registry round-trip
     plus the ReplicationUtils.contains resolution _peer_scope feeds to
     replicate_log."""
-    from hbase_spark.shell import (
-        shell_append_peer_exclude_table_cfs,
-        shell_append_peer_namespaces,
-        shell_remove_peer_exclude_table_cfs,
-        shell_remove_peer_namespaces,
-        shell_set_peer_exclude_namespaces,
-        shell_set_peer_replicate_all,
-        shell_update_peer_config,
-    )
+    from hbase_spark.shell import shell
 
     catalog.add_peer("p1", "/tmp/na")
     # default: replicate-all; excludes carve out of it
     assert catalog._peer_scope({"enabled": True}, "t", ["f", "g"]) == ["f", "g"]
-    shell_set_peer_exclude_namespaces(catalog, "p1", ["secretns"])
+    shell(catalog, "set_peer_exclude_namespaces", "p1", ["secretns"])
     p = catalog.get_peer_config("p1")
     assert catalog._peer_scope(p, "secretns:t", ["f"]) == []
     assert catalog._peer_scope(p, "t", ["f"]) == ["f"]
-    shell_append_peer_exclude_table_cfs(catalog, "p1", {"t": ["g"]})
+    shell(catalog, "append_peer_exclude_table_cfs", "p1", {"t": ["g"]})
     p = catalog.get_peer_config("p1")
     assert catalog._peer_scope(p, "t", ["f", "g"]) == ["f"]
-    shell_remove_peer_exclude_table_cfs(catalog, "p1", {"t": ["g"]})
+    shell(catalog, "remove_peer_exclude_table_cfs", "p1", {"t": ["g"]})
     p = catalog.get_peer_config("p1")
     assert catalog._peer_scope(p, "t", ["f", "g"]) == ["f", "g"]
     # replicate_all=false conflicts with a live exclude scope
     with pytest.raises(ValueError):
-        shell_set_peer_replicate_all(catalog, "p1", False)
-    shell_set_peer_exclude_namespaces(catalog, "p1", None)
-    shell_set_peer_replicate_all(catalog, "p1", False)
+        shell(catalog, "set_peer_replicate_all", "p1", False)
+    shell(catalog, "set_peer_exclude_namespaces", "p1", None)
+    shell(catalog, "set_peer_replicate_all", "p1", False)
     # selective mode: namespaces include-list
-    shell_append_peer_namespaces(catalog, "p1", ["prod"])
+    shell(catalog, "append_peer_namespaces", "p1", ["prod"])
     p = catalog.get_peer_config("p1")
     assert catalog._peer_scope(p, "prod:t", ["f"]) == ["f"]
     assert catalog._peer_scope(p, "other", ["f"]) == []
-    shell_remove_peer_namespaces(catalog, "p1", ["prod"])
+    shell(catalog, "remove_peer_namespaces", "p1", ["prod"])
     p = catalog.get_peer_config("p1")
     assert catalog._peer_scope(p, "prod:t", ["f"]) == []
     # and replicate_all=true conflicts with an include scope
-    shell_append_peer_namespaces(catalog, "p1", ["prod"])
+    shell(catalog, "append_peer_namespaces", "p1", ["prod"])
     with pytest.raises(ValueError):
-        shell_set_peer_replicate_all(catalog, "p1", True)
+        shell(catalog, "set_peer_replicate_all", "p1", True)
     # update_peer_config merges arbitrary allowed fields
-    cfg = shell_update_peer_config(catalog, "p1", bandwidth=1024)
+    cfg = shell(catalog, "update_peer_config", "p1", bandwidth=1024)
     assert cfg["bandwidth"] == 1024 and cfg["namespaces"] == ["prod"]
     with pytest.raises(ValueError):
-        shell_update_peer_config(catalog, "p1", bogus_field=1)
+        shell(catalog, "update_peer_config", "p1", bogus_field=1)
 
 
 def test_rsgroup_refinements_rename_namespaces_config(catalog):
-    from hbase_spark.shell import (
-        shell_alter_rsgroup_config,
-        shell_get_namespace_rsgroup,
-        shell_move_namespaces_rsgroup,
-        shell_move_servers_tables_rsgroup,
-        shell_rename_rsgroup,
-        shell_show_rsgroup_config,
-    )
+    from hbase_spark.shell import shell
 
     catalog.add_rsgroup("batch")
     catalog.create_namespace("etl")
-    shell_move_namespaces_rsgroup(catalog, ["etl"], "batch")
-    assert shell_get_namespace_rsgroup(catalog, "etl") == "batch"
-    assert shell_get_namespace_rsgroup(catalog, "nowhere") == "default"
-    cfg = shell_alter_rsgroup_config(catalog, "batch", {"k": "v", "x": "1"})
+    shell(catalog, "move_namespaces_rsgroup", ["etl"], "batch")
+    assert shell(catalog, "get_namespace_rsgroup", "etl") == "batch"
+    assert shell(catalog, "get_namespace_rsgroup", "nowhere") == "default"
+    cfg = shell(catalog, "alter_rsgroup_config", "batch", {"k": "v", "x": "1"})
     assert cfg == {"k": "v", "x": "1"}
-    cfg = shell_alter_rsgroup_config(catalog, "batch", {"x": ""})  # unset
-    assert shell_show_rsgroup_config(catalog, "batch") == {"k": "v"}
-    shell_rename_rsgroup(catalog, "batch", "nightly")
-    assert shell_get_namespace_rsgroup(catalog, "etl") == "nightly"
-    assert shell_show_rsgroup_config(catalog, "nightly") == {"k": "v"}
+    cfg = shell(catalog, "alter_rsgroup_config", "batch", {"x": ""})  # unset
+    assert shell(catalog, "show_rsgroup_config", "batch") == {"k": "v"}
+    shell(catalog, "rename_rsgroup", "batch", "nightly")
+    assert shell(catalog, "get_namespace_rsgroup", "etl") == "nightly"
+    assert shell(catalog, "show_rsgroup_config", "nightly") == {"k": "v"}
     with pytest.raises(ValueError):
-        shell_rename_rsgroup(catalog, "missing", "z")
+        shell(catalog, "rename_rsgroup", "missing", "z")
     catalog.create_table("rg_t", ["f"])
-    shell_move_servers_tables_rsgroup(
-        catalog, ["s1:16020"], ["rg_t"], "nightly"
+    shell(
+        catalog, "move_servers_tables_rsgroup", ["s1:16020"], ["rg_t"], "nightly"
     )
     g = catalog.get_rsgroup("nightly")
     assert "rg_t" in g["tables"] and "s1:16020" in g["servers"]
 
 
 def test_batch_table_ops_and_drop(catalog):
-    from hbase_spark.shell import (
-        shell_disable_all,
-        shell_drop,
-        shell_drop_all,
-        shell_enable_all,
-    )
+    from hbase_spark.shell import shell
 
     for n in ("ba_one", "ba_two", "other"):
         catalog.create_table(n, ["f"])
-    assert sorted(shell_disable_all(catalog, "^ba_")) == ["ba_one", "ba_two"]
+    assert sorted(shell(catalog, "disable_all", "^ba_")) == ["ba_one", "ba_two"]
     assert not catalog.is_table_enabled("ba_one")
     assert catalog.is_table_enabled("other")
-    assert shell_enable_all(catalog, "^ba_one$") == ["ba_one"]
+    assert shell(catalog, "enable_all", "^ba_one$") == ["ba_one"]
     with pytest.raises(ValueError):  # enabled tables block drop_all
-        shell_drop_all(catalog, "^ba_")
+        shell(catalog, "drop_all", "^ba_")
     with pytest.raises(ValueError):  # drop requires disabled
-        shell_drop(catalog, "ba_one")
+        shell(catalog, "drop", "ba_one")
     catalog.disable_table("ba_one")
-    shell_drop(catalog, "ba_one")
-    assert shell_drop_all(catalog, "^ba_") == ["ba_two"]
+    shell(catalog, "drop", "ba_one")
+    assert shell(catalog, "drop_all", "^ba_") == ["ba_two"]
     assert "ba_one" not in catalog.list_tables()
     assert "ba_two" not in catalog.list_tables()
 
 
 def test_alter_namespace_and_table_snapshots_listing(catalog):
-    from hbase_spark.shell import (
-        shell_alter_namespace,
-        shell_list_table_snapshots,
-    )
+    from hbase_spark.shell import shell
 
     catalog.create_namespace("cfg")
-    desc = shell_alter_namespace(catalog, "cfg", {"quota": "5", "tmp": "x"})
+    desc = shell(catalog, "alter_namespace", "cfg", {"quota": "5", "tmp": "x"})
     assert desc["config"] == {"quota": "5", "tmp": "x"}
-    desc = shell_alter_namespace(catalog, "cfg", {"tmp": ""})  # unset
+    desc = shell(catalog, "alter_namespace", "cfg", {"tmp": ""})  # unset
     assert catalog.describe_namespace("cfg")["config"] == {"quota": "5"}
     with pytest.raises(ValueError):
-        shell_alter_namespace(catalog, "default", {"a": "b"})
+        shell(catalog, "alter_namespace", "default", {"a": "b"})
 
     catalog.create_table("snapt", ["f"])
     t = shell_put(catalog.table("snapt"), "r", "f:q", "v", ts=1, seq=1)
@@ -1132,23 +1062,16 @@ def test_alter_namespace_and_table_snapshots_listing(catalog):
     t2 = shell_put(catalog.table("snapu"), "r", "f:q", "v", ts=1, seq=1)
     catalog.flush("snapu", t2)
     catalog.snapshot("u_one", "snapu")
-    assert sorted(shell_list_table_snapshots(catalog, "snapt")) == [
+    assert sorted(shell(catalog, "list_table_snapshots", "snapt")) == [
         "s_one", "s_two",
     ]
-    assert shell_list_table_snapshots(catalog, "snapt", "two$") == ["s_two"]
+    assert shell(catalog, "list_table_snapshots", "snapt", "two$") == ["s_two"]
 
 
 def test_misc_introspection_regioninfo_walroll_capabilities(catalog, tmp_path):
-    from hbase_spark.shell import (
-        shell_cleaner_chore_enabled,
-        shell_cleaner_chore_run,
-        shell_cleaner_chore_switch,
-        shell_list_security_capabilities,
-        shell_regioninfo,
-        shell_wal_roll_all,
-    )
+    from hbase_spark.shell import shell
 
-    caps = shell_list_security_capabilities(catalog)
+    caps = shell(catalog, "list_security_capabilities")
     assert "CELL_VISIBILITY" in caps and "AUTHORIZATION" in caps
 
     catalog.create_table("ri", ["f"])
@@ -1156,7 +1079,7 @@ def test_misc_introspection_regioninfo_walroll_capabilities(catalog, tmp_path):
     for i in range(10):
         t = shell_put(t, f"r{i:02d}", "f:q", str(i), ts=1, seq=i)
     catalog.flush("ri", t, num_regions=2)
-    info = shell_regioninfo(catalog, "ri", "r05")
+    info = shell(catalog, "regioninfo", "ri", "r05")
     assert info["start_key"] <= "r05" <= info["end_key"]
     assert info["data_bytes"] > 0
 
@@ -1168,17 +1091,17 @@ def test_misc_introspection_regioninfo_walroll_capabilities(catalog, tmp_path):
         pq.write_table(
             pa.table({"x": [1]}), str(tmp_path / d / "seg1.parquet")
         )
-    rolled = shell_wal_roll_all(
-        catalog, [str(tmp_path / "wala"), str(tmp_path / "walb")]
+    rolled = shell(
+        catalog, "wal_roll_all", [str(tmp_path / "wala"), str(tmp_path / "walb")]
     )
     assert all(v["sealed"] == 1 for v in rolled.values())
 
-    assert shell_cleaner_chore_enabled(catalog)
-    shell_cleaner_chore_switch(catalog, False)
+    assert shell(catalog, "cleaner_chore_enabled")
+    shell(catalog, "cleaner_chore_switch", False)
     with pytest.raises(RuntimeError):
-        shell_cleaner_chore_run(catalog)
-    shell_cleaner_chore_switch(catalog, True)
-    assert isinstance(shell_cleaner_chore_run(catalog, dry_run=True), dict)
+        shell(catalog, "cleaner_chore_run")
+    shell(catalog, "cleaner_chore_switch", True)
+    assert isinstance(shell(catalog, "cleaner_chore_run", dry_run=True), dict)
 
 
 def test_set_visibility_stamps_matching_cells(catalog):

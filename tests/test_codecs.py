@@ -11,19 +11,39 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from hbase_spark.functions.codecs import (
+    bytes_from_byte,
+    bytes_from_double,
+    bytes_from_float,
+    bytes_from_int,
     bytes_from_long,
+    bytes_from_short,
+    bytes_from_string,
     bytes_to_long,
+    bytes_to_string,
+    fixed_length,
+    ordered_from_blob,
+    ordered_from_blob_var,
+    ordered_from_byte,
     ordered_from_double,
     ordered_from_long,
+    ordered_from_short,
     ordered_from_string,
     ordered_to_long,
+    py_bytes_from_byte,
+    py_bytes_from_double,
+    py_bytes_from_float,
+    py_bytes_from_int,
     py_bytes_from_long,
+    py_bytes_from_short,
+    py_bytes_to_long,
     py_ordered_from_double,
     py_ordered_from_long,
     py_ordered_from_string,
     py_ordered_to_long,
     py_struct_key,
     struct_key,
+    terminated,
+    union_key,
 )
 
 I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
@@ -93,19 +113,62 @@ def test_py_struct_key_preserves_tuple_order(tuples):
 
 def test_spark_codecs_match_python(spark):
     vals = [-(2**63), -1_000_000, -1, 0, 1, 42, 2**40, 2**63 - 1]
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
+    ints = [-(2**31), -70_000, -1, 0, 1, 42, 2**24, 2**31 - 1]
+    shorts = [-(2**15), -300, -1, 0, 1, 42, 2**10, 2**15 - 1]
+    tiny = [-128, -100, -1, 0, 1, 42, 64, 127]
+    floats = [-math.inf, -1.5, -0.0, 0.0, 1e-30, 2.5, 3.0e38, math.inf]
+    doubles = [-math.inf, -1.5, -0.0, 0.0, 1e-300, 2.5, 1e300, math.inf]
+    strs = ["", "a", "abc", "h\u00e9llo", "\u65e5\u672c", "x\x00y", "z" * 40,
+            "\U0001f600"]
+    df = spark.createDataFrame(
+        list(zip(vals, ints, shorts, tiny, floats, doubles, strs)),
+        "v long, i int, s short, b byte, f float, d double, t string",
+    )
     rows = df.select(
-        "v",
+        "v", "i", "s", "b", "f", "d", "t",
         bytes_from_long(F.col("v")).alias("be"),
         ordered_from_long(F.col("v")).alias("oe"),
         bytes_to_long(bytes_from_long(F.col("v"))).alias("rt"),
         ordered_to_long(ordered_from_long(F.col("v"))).alias("ort"),
+        bytes_from_int(F.col("i")).alias("bi"),
+        bytes_from_short(F.col("s")).alias("bs"),
+        bytes_from_byte(F.col("b")).alias("bb"),
+        bytes_from_float(F.col("f")).alias("bf"),
+        bytes_from_double(F.col("d")).alias("bd"),
+        bytes_from_string(F.col("t")).alias("bt"),
+        bytes_to_string(bytes_from_string(F.col("t"))).alias("trt"),
+        union_key(1, F.col("v"), "long", 3).alias("uk"),
+        union_key(0, F.col("d"), "double").alias("ukd"),
+        fixed_length(F.col("i"), "int", 6).alias("fl"),
+        fixed_length(F.col("s"), "short", 2).alias("fls"),
+        ordered_from_short(F.col("s")).alias("os"),
+        ordered_from_byte(F.col("b")).alias("ob"),
+        ordered_from_blob(bytes_from_string(F.col("t"))).alias("obl"),
+        ordered_from_blob_var(bytes_from_string(F.col("t"))).alias("obv"),
+        terminated(F.col("s"), "short", b"\xff\xff\xff").alias("term"),
     ).collect()
     for r in rows:
         assert bytes(r.be) == py_bytes_from_long(r.v)
+        assert py_bytes_to_long(bytes(r.be)) == r.v
         assert bytes(r.oe) == py_ordered_from_long(r.v)
         assert r.rt == r.v
         assert r.ort == r.v
+        assert bytes(r.bi) == py_bytes_from_int(r.i)
+        assert bytes(r.bs) == py_bytes_from_short(r.s)
+        assert bytes(r.bb) == py_bytes_from_byte(r.b)
+        assert bytes(r.bf) == py_bytes_from_float(r.f)
+        assert bytes(r.bd) == py_bytes_from_double(r.d)
+        assert bytes(r.bt) == r.t.encode("utf-8")
+        assert r.trt == r.t
+        assert bytes(r.uk) == py_union_key(1, r.v, "long", 3)
+        assert bytes(r.ukd) == py_union_key(0, r.d, "double")
+        assert bytes(r.fl) == py_fixed_length(r.i, "int", 6)
+        assert bytes(r.fls) == py_fixed_length(r.s, "short", 2)
+        assert bytes(r.os) == py_ordered_from_short(r.s)
+        assert bytes(r.ob) == py_ordered_from_byte(r.b)
+        assert bytes(r.obl) == py_ordered_from_blob(r.t.encode("utf-8"))
+        assert bytes(r.obv) == py_ordered_from_blob_var(r.t.encode("utf-8"))
+        assert bytes(r.term) == py_terminated(r.s, "short", b"\xff\xff\xff")
 
 
 def test_spark_double_codec_matches_python(spark):

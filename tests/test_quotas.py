@@ -16,16 +16,7 @@ from hbase_spark.quotas import (
     RpcThrottlingException,
     SpaceLimitingException,
 )
-from hbase_spark.shell import (
-    shell_list_quota_snapshots,
-    shell_list_quotas,
-    shell_processlist,
-    shell_put,
-    shell_set_quota,
-    shell_status,
-    shell_version,
-    shell_whoami,
-)
+from hbase_spark.shell import shell, shell_put
 
 
 @pytest.fixture()
@@ -152,35 +143,35 @@ def test_throttle_lookup_precedence(catalog):
 
 def test_shell_set_and_list_quota(catalog):
     name = _seed(catalog)
-    shell_set_quota(catalog, TYPE="SPACE", TABLE=name, LIMIT=123,
-                    POLICY="NO_INSERTS")
-    shell_set_quota(catalog, TYPE="THROTTLE", USER="bob",
-                    THROTTLE_TYPE="WRITE_NUMBER", LIMIT=7)
-    q = shell_list_quotas(catalog)
+    shell(catalog, "set_quota", TYPE="SPACE", TABLE=name, LIMIT=123,
+          POLICY="NO_INSERTS")
+    shell(catalog, "set_quota", TYPE="THROTTLE", USER="bob",
+          THROTTLE_TYPE="WRITE_NUMBER", LIMIT=7)
+    q = shell(catalog, "list_quotas")
     assert q["space"][name] == {"limit": 123, "policy": "NO_INSERTS"}
     assert q["throttle"]["u=bob"]["limit"] == 7
-    snaps = shell_list_quota_snapshots(catalog)
+    snaps = shell(catalog, "list_quota_snapshots")
     assert snaps[name]["in_violation"]
-    shell_set_quota(catalog, TYPE="SPACE", TABLE=name, LIMIT="NONE")
-    assert name not in shell_list_quotas(catalog)["space"]
+    shell(catalog, "set_quota", TYPE="SPACE", TABLE=name, LIMIT="NONE")
+    assert name not in shell(catalog, "list_quotas")["space"]
     with pytest.raises(ValueError):
-        shell_set_quota(catalog, TYPE="SPACE", TABLE=name, LIMIT=1,
-                        POLICY="NO_WRITES", BOGUS=1)
+        shell(catalog, "set_quota", TYPE="SPACE", TABLE=name, LIMIT=1,
+              POLICY="NO_WRITES", BOGUS=1)
 
 
 def test_shell_status_processlist_version_whoami(catalog):
     name = _seed(catalog)
-    st = shell_status(catalog)
+    st = shell(catalog, "status")
     assert st["servers"] == 1 and st["tables"] == 1 and st["regions"] >= 1
-    det = shell_status(catalog, "detailed")
+    det = shell(catalog, "status", "detailed")
     assert det["per_table_regions"][name] >= 1
     catalog.add_peer("p1", "/tmp/nowhere")
-    rep = shell_status(catalog, "replication")
+    rep = shell(catalog, "status", "replication")
     assert "p1" in rep["peers"]
-    assert isinstance(shell_processlist(catalog), list)
-    assert "Spark" in shell_version(catalog)
+    assert isinstance(shell(catalog, "processlist"), list)
+    assert "Spark" in shell(catalog, "version")
     catalog.grant("default", "RW")
-    who = shell_whoami(catalog, "default")
+    who = shell(catalog, "whoami", "default")
     assert who["user"] == "default" and who["permissions"] == "RW"
 
 
@@ -214,17 +205,13 @@ def test_rpc_throttle_switch_bypasses_all_limiters(catalog):
     switch is off every throttle_limiter lookup resolves to None — the
     reference's quota-manager bypass — and re-enabling restores
     enforcement."""
-    from hbase_spark.shell import (
-        shell_disable_rpc_throttle,
-        shell_enable_rpc_throttle,
-        shell_rpc_throttle_enabled,
-    )
+    from hbase_spark.shell import shell
 
     catalog.set_throttle_quota(user="u", table="t", limit=5)
-    assert shell_rpc_throttle_enabled(catalog)
+    assert shell(catalog, "rpc_throttle_enabled")
     assert catalog.throttle_limiter(user="u", table="t").limit == 5
-    prev = shell_disable_rpc_throttle(catalog)
-    assert prev is True and not shell_rpc_throttle_enabled(catalog)
+    prev = shell(catalog, "disable_rpc_throttle")
+    assert prev is True and not shell(catalog, "rpc_throttle_enabled")
     assert catalog.throttle_limiter(user="u", table="t") is None
-    shell_enable_rpc_throttle(catalog)
+    shell(catalog, "enable_rpc_throttle")
     assert catalog.throttle_limiter(user="u", table="t").limit == 5

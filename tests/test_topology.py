@@ -18,13 +18,7 @@ import pytest
 
 from hbase_spark.admin import Admin
 from hbase_spark.quotas import RpcThrottlingException
-from hbase_spark.shell import (
-    shell_alter_status,
-    shell_clear_deadservers,
-    shell_count,
-    shell_put,
-    shell_table_help,
-)
+from hbase_spark.shell import shell, shell_count, shell_put, shell_table_help
 from hbase_spark.topology import MasterNotRunningError
 
 SERVERS = ["rs1.example.com,16020,1", "rs2.example.com,16020,1",
@@ -78,8 +72,8 @@ def test_stop_regionserver_crash_procedure_and_clear_deadservers(catalog):
     # no region is served by the dead server anymore
     assert SERVERS[1] not in set(catalog.assignments("t").values())
     # clear_deadservers returns the NOT-cleared names (ruby contract)
-    assert shell_clear_deadservers(catalog, SERVERS[1]) == []
-    assert shell_clear_deadservers(catalog, "rs9.example.com,1,1") == [
+    assert shell(catalog, "clear_deadservers", SERVERS[1]) == []
+    assert shell(catalog, "clear_deadservers", "rs9.example.com,1,1") == [
         "rs9.example.com,1,1"
     ]
     assert catalog.list_deadservers() == []
@@ -503,7 +497,7 @@ def test_alter_async_and_status(catalog):
     _seed(catalog, "aa", rows=4, regions=2)
     pid = catalog.alter_async("aa", "g", FamilyDescriptor())
     assert pid > 0
-    st = shell_alter_status(catalog, "aa")
+    st = shell(catalog, "alter_status", "aa")
     assert st["regions_updated"] == st["regions_total"] == 2
     assert st["state"] == "SUCCESS"
     assert "g" in catalog._read_desc("aa")["families"]
