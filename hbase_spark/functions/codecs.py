@@ -104,9 +104,15 @@ def ordered_from_string(col: Column) -> Column:
     """OrderedString (OrderedBytes.java encodeString): UTF-8 body plus a
     0x00 terminator so a shorter string sorts before its extensions and
     the next struct field can't bleed in.  (The reference escapes
-    embedded NULs; we require NUL-free input — enforced in the Python
-    twin, documented here.)"""
-    return F.concat(F.encode(col, "UTF-8"), F.lit(b"\x00"))
+    embedded NULs; we require NUL-free input: a NUL would end the field
+    early, so the job fails on one, as the Python twin raises.)"""
+    body = F.when(
+        F.instr(col, "\x00") > 0,
+        F.raise_error(
+            F.lit("ordered string encoding requires NUL-free input")
+        ),
+    ).otherwise(F.encode(col, "UTF-8"))
+    return F.concat(body, F.lit(b"\x00"))
 
 
 def py_ordered_from_long(v: int) -> bytes:

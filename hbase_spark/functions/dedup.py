@@ -228,6 +228,12 @@ def _gram_hash_exprs(num_hashes: int, shingle_n: int) -> tuple[str, str, str]:
     return gh, harr, sig
 
 
+# Names the gram/signature/band hash scheme of ``_gram_hash_exprs`` and
+# ``_band_bucket_expr``.  Change it with either of them: streaming state
+# keyed by bucket ids of another scheme must fail, not silently miss.
+_BAND_SCHEME = "xxh64-multiarg"
+
+
 def _band_bucket_expr(num_hashes: int, bands: int) -> str:
     """selectExpr string: explode the ``_sig`` column into one
     xxhash64 bucket id per band (hashes the band's r slots directly as

@@ -121,16 +121,6 @@ def agg_table(
     )
 
 
-def agg_median(visible, family, qualifier, interpreter="long"):
-    """AggregationClient.median — AggregationClient.java:778,796.
-    Exact via the bounded two-phase protocol.  The other endpoint
-    scalars (max/min/sum/avg/std) are columns of the same
-    ``agg_table`` row."""
-    return agg_table(
-        visible, family, qualifier, interpreter=interpreter,
-    ).collect()[0]["median"]
-
-
 def median_two_phase(
     df: DataFrame,
     value: Column,

@@ -6,6 +6,7 @@ struct compound-key ordering.
 
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -169,6 +170,19 @@ def test_spark_codecs_match_python(spark):
         assert bytes(r.obl) == py_ordered_from_blob(r.t.encode("utf-8"))
         assert bytes(r.obv) == py_ordered_from_blob_var(r.t.encode("utf-8"))
         assert bytes(r.term) == py_terminated(r.s, "short", b"\xff\xff\xff")
+
+
+def test_spark_ordered_string_rejects_nul(spark):
+    """A NUL would end an OrderedString field early, so two keys could
+    collide or sort out of tuple order: the Column form fails the job
+    on one, as ``py_ordered_from_string`` raises."""
+    df = spark.createDataFrame([("x\x00y", 1), ("xy", 2)], "t string, n long")
+    with pytest.raises(ValueError):
+        py_struct_key(("x\x00y", "string"), (1, "long"))
+    with pytest.raises(Exception, match="NUL-free"):
+        df.select(struct_key((F.col("t"), "string"), (F.col("n"), "long"))).collect()
+    ok = df.filter("n = 2").select(ordered_from_string(F.col("t")).alias("e"))
+    assert bytes(ok.first().e) == py_ordered_from_string("xy")
 
 
 def test_spark_double_codec_matches_python(spark):

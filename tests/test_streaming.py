@@ -8,6 +8,8 @@ import shutil
 import tempfile
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from hbase_spark.model import CellType, cell_schema
@@ -694,6 +696,8 @@ def test_stream_minhash_candidates_equals_batch_banding(spark, dirs):
         .start()
     )
     q.awaitTermination(120)
+    # two files, two micro-batches: no trailing no-data batch
+    assert len(q.recentProgress) == 2
     got = {
         (r.a, r.b)
         for r in spark.sql("SELECT DISTINCT a, b FROM mh_cands").collect()
@@ -713,14 +717,13 @@ def test_stream_minhash_candidates_equals_batch_banding(spark, dirs):
 
 
 def test_stream_minhash_state_timeout_non_utc_timezone(spark, dirs):
-    """The state timeout must come from the RAW epoch millis, not a
-    pandas conversion of the session-tz-naive event time: under a
-    non-UTC session timezone the naive->UTC reinterpretation shifts
-    the timeout by the zone offset, and with a short TTL a negative
-    shift lands BELOW the watermark — setTimeoutTimestamp raises and
-    the query dies.  Pin the fix by running with a UTC-5 zone and a
-    1s TTL: the query must complete and still emit the cross-batch
-    pair."""
+    """The state TTL must come from the RAW epoch millis, not a pandas
+    conversion of the session-tz-naive event time: under a non-UTC
+    session timezone the naive->UTC reinterpretation shifts a bucket's
+    latest time by the zone offset, and with a short TTL a negative
+    shift evicts the bucket before its next member arrives.  Pin it by
+    running with a UTC-5 zone and a 1s TTL: the query must complete
+    and still emit the cross-batch pair."""
     from hbase_spark.streaming.dedup import stream_minhash_candidates
 
     base = (
@@ -763,6 +766,250 @@ def test_stream_minhash_state_timeout_non_utc_timezone(spark, dirs):
         assert (1, 2) in got
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
+
+
+_MH_BASE = (
+    "the quick brown fox jumps over the lazy dog and runs far "
+    "away into the deep dark forest tonight"
+)
+_MH_SCHEMA = "doc_id long, text string, ts long"
+
+
+def _doc_segments(spark, log, segments):
+    """One parquet file per segment, in arrival order."""
+    for rows in segments:
+        spark.createDataFrame(rows, _MH_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(log)
+
+
+def _doc_stream(spark, log):
+    return (
+        spark.readStream.schema(_MH_SCHEMA).option("maxFilesPerTrigger", 1)
+        .parquet(log)
+    )
+
+
+def _band_step_reference(stored, rows, cap, cutoff):
+    """The per-bucket definition ``_band_step`` vectorizes: evict, then
+    pair each new id with the bucket's stored and new ids, then store
+    the first ``cap``."""
+    state = {b: (m, t) for b, (m, t) in stored.items() if t >= cutoff}
+    pairs = set()
+    for bucket in sorted({b for b, _, _ in rows}):
+        seen, latest = state.get(bucket, ([], None))
+        batch = [(i, t) for b, i, t in rows if b == bucket]
+        new = sorted({i for i, _ in batch} - set(seen))
+        for j, x in enumerate(new):
+            for y in seen + new[:j]:
+                pairs.add((min(x, y), max(x, y)))
+        ts = [t for _, t in batch] + ([] if latest is None else [latest])
+        state[bucket] = ((seen + new)[:cap], max(ts))
+    return pairs, {b: v for b, v in state.items() if v[0]}
+
+
+@given(
+    st.dictionaries(
+        st.integers(-3, 3),
+        st.tuples(
+            st.lists(st.integers(0, 9), min_size=1, max_size=4, unique=True),
+            st.integers(0, 20),
+        ),
+        max_size=4,
+    ),
+    st.lists(
+        st.tuples(st.integers(-3, 3), st.integers(0, 9), st.integers(0, 20)),
+        min_size=1, max_size=12,
+    ),
+    st.integers(1, 4),
+    st.integers(-1, 21),
+)
+@settings(max_examples=200, deadline=None)
+def test_band_step_matches_per_bucket_reference(stored, rows, cap, cutoff):
+    """The vectorized key call of stream_minhash_candidates equals the
+    per-bucket loop it replaced, with eviction before pairing."""
+    import numpy as np
+
+    from hbase_spark.streaming.dedup import _band_step
+
+    stored = {b: (m[:cap], t) for b, (m, t) in stored.items()}
+    want_pairs, want_state = _band_step_reference(stored, rows, cap, cutoff)
+    order = sorted(stored)
+    arr = lambda xs: np.asarray(xs, np.int64)  # noqa: E731
+    (a, b), (sb, sn, sm, lt) = _band_step(
+        (
+            arr(order),
+            arr([len(stored[k][0]) for k in order]),
+            arr([i for k in order for i in stored[k][0]]),
+            arr([stored[k][1] for k in order]),
+        ),
+        tuple(arr(c) for c in zip(*rows)),
+        cap=cap,
+        cutoff=cutoff,
+    )
+    assert list(zip(a.tolist(), b.tolist())) == sorted(want_pairs)
+    members = np.split(sm, np.cumsum(sn)[:-1])
+    got_state = {
+        int(k): (m.tolist(), int(t)) for k, m, t in zip(sb, members, lt)
+    }
+    assert got_state == want_state
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_stream_minhash_evicts_inside_the_call_and_caps(spark, dirs, tz):
+    """Eviction runs in the key's call, before pairing: doc 4 arrives
+    10.5 s after its bucket-mates, past their 1 s TTL once the
+    unrelated doc has moved the watermark, so it pairs with nothing.
+    With cap=2 doc 3 pairs with the stored docs 1 and 2 but is not
+    stored.  The TTL comes from the raw epoch millis, so a non-UTC
+    session timezone changes nothing."""
+    from hbase_spark.streaming.dedup import stream_minhash_candidates
+
+    t = 1_700_000_000_000
+    _doc_segments(spark, dirs["log"], [
+        [(1, _MH_BASE, t), (2, _MH_BASE, t)],
+        [(3, _MH_BASE, t + 1)],
+        [(9, "completely different words about spark shuffles and joins",
+          t + 10_000)],
+        [(4, _MH_BASE, t + 10_500)],
+    ])
+    prev_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        q = (
+            stream_minhash_candidates(
+                _doc_stream(spark, dirs["log"]), bands=16, num_hashes=64,
+                cap=2, watermark="0 seconds", state_ttl_ms=1_000,
+            )
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName("mh_evict")
+            .option("checkpointLocation", dirs["ckpt"])
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        got = {
+            (r.a, r.b)
+            for r in spark.sql("SELECT DISTINCT a, b FROM mh_evict").collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+    assert got == {(1, 2), (1, 3), (2, 3)}
+
+
+def test_stream_minhash_pairs_a_late_row_within_the_ttl(spark, dirs):
+    """Input rows are not dropped as late: a doc whose event time is
+    below the watermark but whose bucket-mate is still within the TTL
+    pairs with it, as batch banding pairs them."""
+    from hbase_spark.streaming.dedup import stream_minhash_candidates
+
+    t = 1_700_000_000_000
+    _doc_segments(spark, dirs["log"], [
+        [(1, _MH_BASE, t + 5_000)],
+        [(3, "completely different words about spark shuffles and joins",
+          t + 9_000)],
+        [(2, _MH_BASE, t)],
+    ])
+    q = (
+        stream_minhash_candidates(
+            _doc_stream(spark, dirs["log"]), bands=16, num_hashes=64,
+            watermark="0 seconds",
+        )
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("mh_late")
+        .option("checkpointLocation", dirs["ckpt"])
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {(r.a, r.b) for r in spark.sql("SELECT a, b FROM mh_late").collect()}
+    assert got == {(1, 2)}
+
+
+def _start_parquet(df, dirs, out):
+    return (
+        df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", f"{dirs['table']}/{out}")
+        .option("checkpointLocation", dirs["ckpt"])
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def test_stream_minhash_rejects_per_bucket_checkpoint(spark, dirs):
+    """A checkpoint written by the older per-bucket state shape (state
+    keyed by the long ``_bucket``) must not be read as coarse-key
+    state: the restart fails Spark's state key schema check."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from hbase_spark.streaming.dedup import stream_minhash_candidates
+
+    t = 1_700_000_000_000
+    _doc_segments(spark, dirs["log"], [[(1, _MH_BASE, t)]])
+
+    def per_bucket(key, pdfs, state):
+        for _ in pdfs:
+            pass
+        state.update(([1],))
+        return iter(())
+
+    old = (
+        _doc_stream(spark, dirs["log"])
+        .selectExpr("xxhash64(text) AS _bucket",
+                    "timestamp_millis(ts) AS _event_time")
+        .withWatermark("_event_time", "1 hour")
+        .groupBy("_bucket")
+        .applyInPandasWithState(
+            per_bucket, "a long, b long", "ids array<long>", "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+    q = _start_parquet(old, dirs, "out")
+    q.awaitTermination(120)
+    assert q.exception() is None
+    _doc_segments(spark, dirs["log"], [[(2, _MH_BASE, t + 1)]])
+    q = _start_parquet(
+        stream_minhash_candidates(
+            _doc_stream(spark, dirs["log"]), bands=16, num_hashes=64),
+        dirs, "out",
+    )
+    with pytest.raises(StreamingQueryException,
+                       match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+        q.awaitTermination(120)
+
+
+def test_stream_minhash_rejects_state_of_another_scheme(spark, dirs):
+    """Band state written under another band-hash scheme (here: other
+    band parameters, so other bucket ids) raises ValueError naming both
+    scheme ids instead of silently missing cross-restart pairs."""
+    from pyspark.errors import StreamingQueryException
+
+    from hbase_spark.streaming.dedup import stream_minhash_candidates
+
+    t = 1_700_000_000_000
+    _doc_segments(spark, dirs["log"], [[(1, _MH_BASE, t)]])
+    q = _start_parquet(
+        stream_minhash_candidates(
+            _doc_stream(spark, dirs["log"]), bands=16, num_hashes=64),
+        dirs, "out",
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    _doc_segments(spark, dirs["log"], [[(2, _MH_BASE, t + 1)]])
+    q = _start_parquet(
+        stream_minhash_candidates(
+            _doc_stream(spark, dirs["log"]), bands=32, num_hashes=64),
+        dirs, "out",
+    )
+    with pytest.raises(StreamingQueryException) as err:
+        q.awaitTermination(120)
+    msg = str(err.value)
+    assert "ValueError" in msg
+    assert "xxh64-multiarg/64/16/3" in msg and "xxh64-multiarg/64/32/3" in msg
 
 
 def test_replay_wals_bracket_hooks(spark, dirs):
